@@ -8,7 +8,28 @@ pre-pass, manifests, resume) and Arrow-vectorized ``mapInArrow`` kernels do
 the encoding — zero per-row Python. See SURVEY.md for the blueprint.
 """
 
+import sys as _sys
+
 __version__ = "0.1.0"
+
+
+def _install_worker_hooks() -> bool:
+    """Inside a Spark Python worker on CPython < 3.13, stop each task's
+    ``importlib.invalidate_caches()`` from re-reading every zip archive on
+    the path (:func:`plc.util.stamp_check_zip_invalidation`). The driver
+    and newer interpreters are left alone. The worker flag is read through
+    ``sys.modules`` so importing plc never imports pyspark."""
+    files = _sys.modules.get("pyspark.core.files")
+    on_worker = getattr(getattr(files, "SparkFiles", None),
+                        "_is_running_on_worker", False)
+    if not on_worker or _sys.version_info >= (3, 13):
+        return False
+    from plc.util import stamp_check_zip_invalidation
+
+    return stamp_check_zip_invalidation()
+
+
+_install_worker_hooks()
 
 
 def __getattr__(name):  # lazy: keep kernel imports pyspark-free

@@ -144,6 +144,19 @@ class _PlanFS:
         return pq.read_table(full_path, columns=columns,
                              filesystem=self.fs)
 
+    def publish_parquet(self, full_path: str, tbl) -> None:
+        """Write ``tbl`` under a dot-prefixed temp name beside
+        ``full_path``, then move it into place. A crash mid-write leaves
+        only the temp file, which Spark's listing (dot files) and plc's
+        pyarrow listings (``.parquet`` names only) both skip."""
+        import uuid
+
+        d, name = posixpath.split(full_path)
+        tmp = posixpath.join(d, f".{name}.{uuid.uuid4().hex[:12]}.tmp")
+        with self.fs.open_output_stream(tmp) as f:
+            pq.write_table(tbl, f)
+        self.fs.move(tmp, full_path)
+
 
 def _prefix_upper(prefix: str) -> str | None:
     """Smallest practical upper bound for the set of strings starting
@@ -191,8 +204,13 @@ def _committed_entries(pfs: _PlanFS, rel: str) -> "dict[int, set[str] | None]":
     is in the part dir". Named entries are the commit point for
     format-written stores: a zombie/speculative attempt's file lands in
     the part dir but is never named here, so readers must open ONLY the
-    named files."""
+    named files.
+
+    Parts whose manifest rows all hold zero chunks (the zero-row commit
+    markers of planned parts that got no data) are left out: they have
+    no data dir to open, and naming one fails a path-pinned scan."""
     out: dict[int, set[str] | None] = {}
+    nonempty: set[int] = set()
     for st in pfs.listdir(posixpath.join(rel, "_manifest", "parts")
                           if rel else posixpath.join("_manifest", "parts")):
         if not st.path.endswith(".parquet"):
@@ -201,6 +219,8 @@ def _committed_entries(pfs: _PlanFS, rel: str) -> "dict[int, set[str] | None]":
         pids = tbl.column("part_id").to_pylist()
         fnames = (tbl.column("file").to_pylist()
                   if "file" in tbl.column_names else [None] * len(pids))
+        nonempty.update(pid for pid, n in zip(
+            pids, tbl.column("n_chunks").to_pylist()) if n)
         for pid, fn in zip(pids, fnames):
             if fn is None:
                 # unknown file set for this part: glob semantics, unless
@@ -209,7 +229,7 @@ def _committed_entries(pfs: _PlanFS, rel: str) -> "dict[int, set[str] | None]":
             else:
                 cur = out.get(pid)
                 out[pid] = {fn} if cur is None else cur | {fn}
-    return out
+    return {pid: v for pid, v in out.items() if pid in nonempty}
 
 
 def _store_roots(pfs: _PlanFS, path: str,
@@ -1139,9 +1159,7 @@ def _commit_store(pfs: _PlanFS, rel: str, msgs: list, wcol: str,
         # nothing else in the part dirs
         "file": pa.array([m.file for m in msgs], pa.string()),
     })
-    with pfs.fs.open_output_stream(
-            j("_manifest", "parts", "manifest-0.parquet")) as f:
-        pq.write_table(man, f)
+    pfs.publish_parquet(j("_manifest", "parts", "manifest-0.parquet"), man)
     # post-commit sweep: reclaim everything the new manifest does not
     # name; a part dir left with no named file at all (stale pid from a
     # replaced store) goes entirely

@@ -626,9 +626,13 @@ def dedup_minhash(df: DataFrame, key_col: str, tokens_col: str = "tokens",
     base = exact_dedup(df, tokens_col, key_col) if collapse_exact else df
     pairs = candidate_pairs(base, key_col, tokens_col, num_hashes, bands,
                             seed, shingle_k).localCheckpoint()
+    # the LSH kernels carry keys as strings: cast the edges back to the
+    # key column's own type, so "min key" follows that type's order
+    ktype = base.schema[key_col].dataType
     verified = jaccard_verify(pairs, base, key_col, tokens_col, shingle_k,
-                              threshold).select("key_a", "key_b") \
-        .localCheckpoint()
+                              threshold).select(
+        F.col("key_a").cast(ktype).alias("key_a"),
+        F.col("key_b").cast(ktype).alias("key_b")).localCheckpoint()
     n_edges = verified.count()
     if n_edges == 0:
         return base
@@ -639,9 +643,9 @@ def dedup_minhash(df: DataFrame, key_col: str, tokens_col: str = "tokens",
         # jobs instead of ~3 shuffle joins per propagation round. The cap
         # bounds driver memory (~100 B/edge); past it, the distributed
         # loop below takes over.
-        parent: dict[str, str] = {}
+        parent: dict = {}
 
-        def find(x: str) -> str:
+        def find(x):
             r = x
             while parent.get(r, r) != r:
                 r = parent[r]
@@ -658,7 +662,7 @@ def dedup_minhash(df: DataFrame, key_col: str, tokens_col: str = "tokens",
         losers = [k for k in parent if find(k) != k]
         spark = base.sparkSession
         losers_df = spark.createDataFrame([(k,) for k in losers],
-                                          f"{key_col} string")
+                                          base.select(key_col).schema)
         return base.join(F.broadcast(losers_df), key_col, "left_anti")
     edges = verified.unionByName(
         verified.select(F.col("key_b").alias("key_a"),

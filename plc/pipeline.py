@@ -766,10 +766,9 @@ def _write_manifest_driver(dst: str, man_rows: list, committed: set[int]
         tbl = pa.table({name: pa.array(list(vals), getattr(pa, t)())
                         for (name, t), vals in zip(fields, cols)})
         pfs.fs.create_dir(pfs.join("_manifest", "parts"), recursive=True)
-        out = pfs.join("_manifest", "parts",
-                       f"manifest-{uuid.uuid4().hex[:12]}.parquet")
-        with pfs.fs.open_output_stream(out) as f:
-            _pq.write_table(tbl, f)
+        pfs.publish_parquet(pfs.join(
+            "_manifest", "parts", f"manifest-{uuid.uuid4().hex[:12]}.parquet"),
+            tbl)
         return True
     except Exception:
         return False

@@ -1,4 +1,5 @@
-"""Deployment helper: ship the plc package to executors.
+"""Deployment helpers: ship the plc package to executors, and keep the
+executor Python workers' per-task set-up cheap.
 
 On a real cluster the job is launched ``spark-submit --py-files plc.zip``
 (BASELINE.json north_star); for interactive sessions and notebooks,
@@ -12,6 +13,7 @@ from __future__ import annotations
 import os
 import tempfile
 import zipfile
+import zipimport
 
 _shipped: set[str] = set()
 
@@ -36,3 +38,36 @@ def ensure_shipped(spark) -> None:
                     z.write(os.path.join(pkg_dir, fn), arcname=f"plc/{fn}")
     sc.addPyFile(zpath)
     _shipped.add(app_id)
+
+
+def stamp_check_zip_invalidation() -> bool:
+    """Make ``zipimporter.invalidate_caches`` re-read an archive only when
+    its ``(st_mtime_ns, st_size)`` stamp changed since this importer last
+    read it (or when ``stat`` fails). Returns False if already installed.
+
+    PySpark calls ``importlib.invalidate_caches()`` at the start of every
+    Python task. Before CPython 3.13 that makes every zipimporter re-read
+    its archive's whole central directory in pure Python: pyspark.zip
+    under a dozen package paths, the spark-core jar, py4j and plc's own
+    zip, about 0.2 CPU-s per task. CPython 3.13 made the method lazy; this
+    gives older interpreters the same saving. An importer with no stamp
+    yet (created before this call) re-reads once, then is stamped."""
+    eager = zipimport.zipimporter.invalidate_caches
+    if getattr(eager, "_plc_stamp_checked", False):
+        return False
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            stamp = (st.st_mtime_ns, st.st_size)
+        except OSError:
+            stamp = None
+        if stamp is None or stamp != getattr(self, "_plc_stamp", None):
+            # the stamp predates the read, so a rewrite during the read
+            # shows as a changed stamp on the next call
+            eager(self)
+            self._plc_stamp = stamp
+
+    invalidate_caches._plc_stamp_checked = True
+    zipimport.zipimporter.invalidate_caches = invalidate_caches
+    return True

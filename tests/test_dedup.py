@@ -61,6 +61,28 @@ def test_dedup_minhash_end_to_end(spark):
     assert all(k.startswith("doc-") for k in kept)
 
 
+@pytest.mark.parametrize("driver_cc", [True, False])
+def test_dedup_minhash_bigint_key(spark, monkeypatch, driver_cc):
+    """dedup_minhash accepts any orderable key: the same corpus keyed by
+    bigint ids keeps the numerically smallest id of every cluster, with
+    driver union-find and with distributed label propagation alike."""
+    from plc import dedup
+
+    if not driver_cc:
+        monkeypatch.setattr(dedup, "_CC_DRIVER_MAX_EDGES", 0)
+    df = _docs_with_dups(spark)
+    ids = {r[0]: i for i, r in enumerate(
+        df.orderBy("doc_id").select("doc_id").collect())}
+    mapping = spark.createDataFrame(list(ids.items()),
+                                    "doc_id string, id bigint")
+    by_id = df.join(mapping, "doc_id").select("id", "tokens")
+    out = dedup_minhash(by_id, "id", "tokens", num_hashes=16, bands=8,
+                        threshold=0.7)
+    assert dict(out.dtypes)["id"] == "bigint"
+    kept = {r[0] for r in out.select("id").collect()}
+    assert kept == {ids[f"doc-{i:04d}"] for i in range(60)}
+
+
 def test_empty_and_short_docs_are_safe(spark):
     df = spark.createDataFrame(
         [("a", []), ("b", [1]), ("c", [1, 2]), ("d", [1, 2, 3])],

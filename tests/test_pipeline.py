@@ -110,6 +110,35 @@ def test_fresh_encode_refuses_existing(spark, src_df):
         shutil.rmtree(dst, ignore_errors=True)
 
 
+def test_empty_straggler_part_keeps_path_pinned_read(spark, src_df):
+    """A planned part that got no rows commits a zero-chunk marker and
+    has no data dir. decode must still pin the scan to the committed
+    paths (no semi-join) and return every row; the plc reader agrees."""
+    from plc.datasource import register
+
+    dst = _dst()
+    try:
+        cfg = PipelineConfig(num_partitions=6, straggler_parts=2)
+        encode(spark, src_df, dst, cfg, mode="overwrite")
+        man = spark.read.parquet(_manifest_path(dst))
+        empty = [r[0] for r in man.filter("n_chunks = 0")
+                 .select("part_id").collect()]
+        assert empty
+        assert not any(os.path.exists(os.path.join(dst, "data",
+                                                   f"part_id={p}"))
+                       for p in empty)
+        out = decode(spark, dst)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "Join" not in plan, plan
+        cols = ["doc_id", "tokens"]
+        assert out.count() == src_df.count() == 2000
+        assert out.select(cols).exceptAll(src_df.select(cols)).count() == 0
+        register(spark)
+        assert spark.read.format("plc").load(dst).count() == 2000
+    finally:
+        shutil.rmtree(dst, ignore_errors=True)
+
+
 def test_plan_determinism_and_pending_predicate(spark, src_df):
     cfg = PipelineConfig(num_partitions=5, straggler_parts=2)
     p1 = build_plan(spark, src_df, cfg)

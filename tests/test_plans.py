@@ -48,15 +48,27 @@ def test_encode_plan_has_exactly_one_shuffle(spark, enc_dir):
     assert "PythonMapInArrow" in p or "MapInArrow" in p, p
 
 
-def test_decode_bounds_push_into_parquet_scan(spark, enc_dir):
+def test_decode_bounds_push_into_parquet_scan(spark, enc_dir, monkeypatch):
+    from plc import pipeline
+
     _, dst = enc_dir
-    out = decode(spark, dst, doc_id_min="doc-000000000100",
-                 doc_id_max="doc-000000000199")
-    p = _physical(out)
+
+    def physical():
+        return _physical(decode(spark, dst, doc_id_min="doc-000000000100",
+                                doc_id_max="doc-000000000199"))
+
+    p = physical()
     # chunk-pruning predicates on manifest min/max must reach the scan
     assert "PushedFilters" in p, p
     assert "max_doc_id" in p and "min_doc_id" in p, p
-    # committed-parts semi-join stays broadcast (no shuffle of the data side)
+    # the committed parts are pinned by path: no semi-join at all, so the
+    # data side is never shuffled
+    assert "Join" not in p and "Exchange" not in p, p
+    # past the path cap the committed-parts semi-join takes over, and it
+    # stays broadcast (no shuffle of the data side)
+    monkeypatch.setattr(pipeline, "_COMMITTED_PATHS_MAX", 0)
+    p = physical()
+    assert "PushedFilters" in p and "max_doc_id" in p, p
     assert "BroadcastHashJoin" in p or "BroadcastNestedLoopJoin" in p, p
     assert "SortMergeJoin" not in p, p
 
