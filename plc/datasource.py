@@ -17,8 +17,10 @@ and Catalyst drives the storage layer exactly like a built-in format:
   slack). Every filter is also returned as unsupported, so Spark
   re-applies the exact predicate on the decoded rows — pruning is a
   conservative superset and can never change results;
-- **committed-parts isolation**: uncommitted part directories (a crashed
-  encode) are invisible, like :func:`plc.pipeline.decode`;
+- **committed-files isolation**: only the data files the manifest names
+  are opened, so uncommitted part directories (a crashed encode) and
+  orphans of losing task attempts are invisible, like
+  :func:`plc.pipeline.decode`;
 - **partitioning**: one Spark input partition per encoded parquet file
   (chunk-pruned row selections travel in the partition descriptor), so a
   1000-executor cluster fans out across part files with zero driver state
@@ -45,9 +47,10 @@ import json
 import os
 import posixpath
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 
-from dataclasses import dataclass
+from dataclasses import asdict, dataclass
 
 from pyspark.sql.datasource import (DataSource, DataSourceArrowWriter,
                                     DataSourceReader,
@@ -196,40 +199,36 @@ def _committed_batch_ids(pfs: _PlanFS) -> list[int]:
     return sorted(out)
 
 
-def _committed_entries(pfs: _PlanFS, rel: str) -> "dict[int, set[str] | None]":
-    """Committed part_id → the set of data file names the manifest lists
-    for it, or None when the manifest predates the ``file`` column (or
-    the part was committed by the pipeline sink, which delegates orphan
-    safety to Spark's own commit protocol) — None means "read whatever
-    is in the part dir". Named entries are the commit point for
-    format-written stores: a zombie/speculative attempt's file lands in
-    the part dir but is never named here, so readers must open ONLY the
-    named files.
+def _manifest_rows(pfs: _PlanFS, rel: str) -> list[dict]:
+    """Every row of every manifest file of a (sub-)store: one commit row
+    per written part file, plus the zero-chunk markers (``file`` NULL) of
+    planned parts that got no data. Manifests are O(files) rows."""
+    rows: list[dict] = []
+    for st in pfs.listdir(posixpath.join(rel, "_manifest", "parts")):
+        if st.path.endswith(".parquet"):
+            rows.extend(pfs.read_parquet(st.path, None).to_pylist())
+    return rows
 
-    Parts whose manifest rows all hold zero chunks (the zero-row commit
-    markers of planned parts that got no data) are left out: they have
-    no data dir to open, and naming one fails a path-pinned scan."""
-    out: dict[int, set[str] | None] = {}
-    nonempty: set[int] = set()
-    for st in pfs.listdir(posixpath.join(rel, "_manifest", "parts")
-                          if rel else posixpath.join("_manifest", "parts")):
-        if not st.path.endswith(".parquet"):
+
+def _committed_entries(pfs: _PlanFS, rel: str) -> "dict[int, set[str]]":
+    """Committed part_id → the data file names the manifest lists for it.
+    The names are the commit point: a zombie or speculative attempt's
+    file lands in the part dir but is never named here, so readers open
+    ONLY the named files. Zero-chunk markers are left out (they have no
+    data dir to open). A non-empty part without a file name comes from a
+    store written before every writer named its files; there is no safe
+    way to tell its data from orphans, so it raises."""
+    out: dict[int, set[str]] = {}
+    for r in _manifest_rows(pfs, rel):
+        if not r["n_chunks"]:
             continue
-        tbl = pfs.read_parquet(st.path, None)
-        pids = tbl.column("part_id").to_pylist()
-        fnames = (tbl.column("file").to_pylist()
-                  if "file" in tbl.column_names else [None] * len(pids))
-        nonempty.update(pid for pid, n in zip(
-            pids, tbl.column("n_chunks").to_pylist()) if n)
-        for pid, fn in zip(pids, fnames):
-            if fn is None:
-                # unknown file set for this part: glob semantics, unless
-                # another row already named files for it
-                out.setdefault(pid, None)
-            else:
-                cur = out.get(pid)
-                out[pid] = {fn} if cur is None else cur | {fn}
-    return {pid: v for pid, v in out.items() if pid in nonempty}
+        if r.get("file") is None:
+            raise ValueError(
+                f"plc store {pfs.join(rel)}: committed part "
+                f"{r['part_id']} has no data file name in its manifest "
+                f"(written by an older plc); re-encode the store")
+        out.setdefault(r["part_id"], set()).add(r["file"])
+    return out
 
 
 def _store_roots(pfs: _PlanFS, path: str,
@@ -267,40 +266,16 @@ def _store_roots(pfs: _PlanFS, path: str,
 def _committed_data_files(pfs: _PlanFS, roots: list[str],
                           pool) -> list[str]:
     """Full paths of every COMMITTED encoded parquet file under the given
-    roots. Manifest-NAMED files are the commit point: open exactly those
-    (no dir listing — an orphan from a zombie or losing speculative
-    attempt in the same dir is invisible, and planning skips one listdir
-    round-trip per part). None entries (pre-file-column manifests,
-    pipeline-sink parts) keep the glob semantics."""
-    committed = {rel: c for rel, c in zip(
-        roots, pool.map(lambda r: _committed_entries(pfs, r), roots))}
+    roots: exactly the manifest-named files (no dir listing — an orphan
+    from a zombie or losing speculative attempt in the same dir is
+    invisible, and planning skips one listdir round-trip per part)."""
     files: list[str] = []
-    for rel in roots:
-        data_rel = posixpath.join(rel, "data") if rel else "data"
-        glob_pids = set()
-        for pid, names in committed[rel].items():
-            if names is None:
-                glob_pids.add(pid)
-            else:
-                files.extend(posixpath.join(
-                    pfs.join(data_rel, f"part_id={pid}"), f)
-                    for f in sorted(names))
-        pdirs = []
-        if glob_pids:
-            for st in pfs.listdir(data_rel):
-                name = posixpath.basename(st.path)
-                if not name.startswith("part_id="):
-                    continue
-                try:
-                    pid = int(name.split("=", 1)[1])
-                except ValueError:
-                    continue  # foreign part_id= name: never committed
-                if pid not in glob_pids:
-                    continue  # uncommitted or manifest-named
-                pdirs.append(posixpath.join(data_rel, name))
-        for infos in pool.map(pfs.listdir, sorted(pdirs)):
-            files.extend(sorted(st.path for st in infos
-                                if st.path.endswith(".parquet")))
+    for rel, entries in zip(roots, pool.map(
+            lambda r: _committed_entries(pfs, r), roots)):
+        for pid in sorted(entries):
+            pdir = pfs.join(rel, "data", f"part_id={pid}")
+            files.extend(posixpath.join(pdir, f)
+                         for f in sorted(entries[pid]))
     return files
 
 
@@ -643,7 +618,7 @@ class PLCReader(DataSourceReader):
                 cols.append("bloom")
             try:
                 tbl = self.pfs.read_parquet(fpath, cols)
-            except Exception:
+            except pa.ArrowInvalid:  # pre-split store: no bloom column
                 cols = ["stats"]
                 tbl = self.pfs.read_parquet(fpath, cols)
             stats = tbl.column("stats")
@@ -689,9 +664,9 @@ class PLCChunksReader(DataSourceReader):
     aggregate fast path (VERDICT r5 #2): the ``payload`` column is never
     requested from the parquet reader, so a monitoring/profiling query
     reads a few KB of footer + metadata columns instead of decoding the
-    store. The served values are EXACT, not estimates, because the encode
-    paths compute them from the chunk's actual rows (pipeline flush() /
-    _encode_task_partition):
+    store. The served values are EXACT, not estimates, because the one
+    chunker every writer shares computes them from the chunk's actual
+    rows (:func:`plc.pipeline._make_encoder`):
 
     - ``sum(n_rows)``    == count(*) of the store
     - ``sum(n_tokens)``  == sum of the weight column (n_tokens is the
@@ -725,8 +700,6 @@ class PLCChunksReader(DataSourceReader):
         return out
 
     def read(self, partition: PLCChunksPartition):
-        import pyarrow as pa
-
         if partition is None:  # Spark probes an empty partition list once
             return
         names = [f.name for f in self.schema.fields]
@@ -792,7 +765,6 @@ def _ranges_mask(rb, flt: dict):
     pyarrow boolean mask; NULL values compare to null → dropped by
     filter, matching decode()'s range semantics."""
     import numpy as np
-    import pyarrow as pa
     import pyarrow.compute as pc
 
     mask = None
@@ -819,8 +791,6 @@ def _read_chunk_partition(partition: PLCChunkPartition | None,
     batch and stream readers). ``partition.filters`` (the option-supplied
     multi-ranges) are applied row-exactly here — Spark never saw them, so
     the reader owns their semantics."""
-    import pyarrow as pa
-
     from plc.chunk import unpack_chunk
 
     if partition is None:  # Spark probes an empty partition list once
@@ -1012,98 +982,152 @@ class PLCWriter(DataSourceArrowWriter):
             pass
 
 
+# one commit row per written part file (the fields of PLCCommit): the
+# message a task returns, the row the manifest stores (``file`` NULL +
+# ``n_chunks`` 0 is the marker of a planned part that got no data)
+_COMMIT_SCHEMA = pa.schema([
+    ("part_id", pa.int32()), ("file", pa.string()), ("n_chunks", pa.int64()),
+    ("n_rows", pa.int64()), ("n_tokens", pa.int64()),
+    ("raw_bytes", pa.int64()), ("enc_bytes", pa.int64()),
+    ("min_doc_id", pa.string()), ("max_doc_id", pa.string())])
+# part-file statistics: only the small metadata columns that chunk
+# pruning and parquet pushdown read. The payload/bloom/stats/codecs
+# values are large and unique, so statistics and dictionary pages there
+# cost memory and decode time and prune nothing
+_PART_FILE_STATS = ["chunk_idx", "n_rows", "n_tokens", "raw_bytes",
+                    "enc_bytes", "min_doc_id", "max_doc_id", "min_w",
+                    "max_w"]
+
+
+def _commit_table(commits: list) -> pa.Table:
+    return pa.Table.from_pylist([asdict(c) for c in commits],
+                                schema=_COMMIT_SCHEMA)
+
+
+def _write_parts(pfs: _PlanFS, rel: str, jobid: str, chunks):
+    """Task side of every writer (encode, encode_direct, the format and
+    stream sinks): write the one-row ENC-schema chunk batches ``chunks``,
+    as :func:`plc.pipeline._make_encoder` yields them (grouped by part),
+    into one parquet file per part STRAIGHT into
+    ``<rel>/data/part_id=<pid>/`` under a per-attempt unique name
+    ``part-<pid>-<jobid>-<uuid>.parquet``, and yield one
+    :class:`PLCCommit` per file. Works on any pyarrow.fs target — object
+    stores have no atomic rename to lean on. The manifest the driver
+    publishes names exactly the winning attempts' files, and readers
+    open only named files, so a zombie or speculative attempt finishing
+    at ANY time — even after commit — leaves an invisible orphan, never
+    duplicate data. Chunks go out in row groups of
+    ``_CHUNKS_PER_PART`` so a sliced reader touches only its own
+    chunks' bytes (:func:`_read_selected`)."""
+    import uuid
+
+    group: list = []
+    cur = writer = sink = None
+
+    def flush() -> None:
+        if group:
+            writer.write_table(pa.Table.from_batches(group)
+                               .drop_columns(["part_id"]))
+            group.clear()
+
+    def close() -> PLCCommit:
+        nonlocal sink
+        flush()
+        writer.close()
+        sink.close()
+        sink = None
+        return cur
+
+    try:
+        for rb in chunks:
+            pid = rb.column("part_id")[0].as_py()
+            if cur is None or pid != cur.part_id:
+                if cur is not None:
+                    yield close()
+                pdir = pfs.join(rel, "data", f"part_id={pid}")
+                pfs.fs.create_dir(pdir, recursive=True)
+                name = (f"part-{pid:05d}-{jobid}-"
+                        f"{uuid.uuid4().hex[:12]}.parquet")
+                sink = pfs.fs.open_output_stream(posixpath.join(pdir, name))
+                writer = pq.ParquetWriter(
+                    sink, rb.drop_columns(["part_id"]).schema,
+                    use_dictionary=False,
+                    compression="none", write_statistics=_PART_FILE_STATS)
+                cur = PLCCommit(pid, name, 0, 0, 0, 0, 0, None, None)
+            cur.n_chunks += 1
+            for f in ("n_rows", "n_tokens", "raw_bytes", "enc_bytes"):
+                setattr(cur, f, getattr(cur, f) + rb.column(f)[0].as_py())
+            mn = rb.column("min_doc_id")[0].as_py()
+            mx = rb.column("max_doc_id")[0].as_py()
+            if mn is not None and (cur.min_doc_id is None
+                                   or mn < cur.min_doc_id):
+                cur.min_doc_id = mn
+            if mx is not None and (cur.max_doc_id is None
+                                   or mx > cur.max_doc_id):
+                cur.max_doc_id = mx
+            group.append(rb)
+            if len(group) == _CHUNKS_PER_PART:
+                flush()
+        if cur is not None:
+            yield close()
+    finally:
+        if sink is not None:  # failed mid-file: an unnamed orphan
+            sink.close()
+
+
 def _encode_task_partition(pfs: _PlanFS, rel: str, pid: int, jobid: str,
-                           wcol: str, max_vals: int, iterator) -> "PLCCommit":
-    """Executor side of a format write (batch AND streaming): pack the
-    task's Arrow batches into codec chunks and write ONE parquet file
-    STRAIGHT into ``<rel>/data/part_id=<pid>/`` (works on any pyarrow.fs
-    target — object stores have no atomic rename to lean on) under a
-    per-attempt unique name. The manifest written by the driver's
-    commit() names exactly the winning attempt's file, and readers open
-    only manifest-named files, so a zombie or speculative attempt
-    finishing at ANY time — even after commit — leaves an invisible
-    orphan, never duplicate data. That is a strictly stronger guarantee
-    than a rename-based promotion, with zero copies."""
-    import uuid as _uuid
+                           wcol: str, max_vals: int, iterator) -> PLCCommit:
+    """Executor side of a format write (batch AND streaming): the task's
+    rows are part ``pid``; the pipeline's own chunker packs them and
+    :func:`_write_parts` writes them. An empty task commits a zero-chunk
+    marker."""
+    from plc.pipeline import PipelineConfig, _make_encoder
 
-    import pyarrow as pa
-    import pyarrow.compute as pc
+    encode = _make_encoder({"bounds": [], "n_parts": 1, "weight_col": wcol},
+                           PipelineConfig(max_chunk_values=max_vals))
+    commit = next(_write_parts(pfs, rel, jobid, encode(iterator, pid)), None)
+    return commit or PLCCommit(pid, None, 0, 0, 0, 0, 0, None, None)
 
-    from plc.chunk import EncodeConfig, column_stats, pack_chunk
-    from plc.pipeline import _ENC_ARROW_SCHEMA, split_bloom_stats
 
-    cfg = EncodeConfig()
-    enc_rows: list[pa.RecordBatch] = []
-    buf: list[pa.RecordBatch] = []
-    wsum = 0
-    chunk_idx = 0
-    totals = {"rows": 0, "tokens": 0, "raw": 0, "enc": 0}
-    mins, maxs = [], []
+def _publish_manifest(pfs: _PlanFS, rel: str, commits: list) -> None:
+    """Driver side of every writer: publish the tasks' commit rows (plus
+    any zero-chunk markers) as ONE new ``manifest-<uuid>.parquet`` —
+    THE commit point, written to a temp name and moved into place, so a
+    crash mid-write leaves no readable manifest — then sweep every data
+    file that no manifest of the store names (losing or retried
+    attempts, a crashed earlier run, a replaced generation); a part dir
+    left with no named file goes entirely. The sweep is best-effort:
+    readers ignore unnamed files regardless, so a crash mid-sweep leaves
+    a valid store plus orphans that :func:`gc` reclaims."""
+    import uuid
 
-    def flush():
-        nonlocal buf, wsum, chunk_idx
-        if not buf:
-            return
-        big = (buf[0] if len(buf) == 1 else
-               pa.Table.from_batches(buf).combine_chunks()
-               .to_batches(max_chunksize=1 << 31)[0])
-        blob, codecs = pack_chunk(big, cfg)
-        stats = column_stats(big)
-        bloom = split_bloom_stats(stats)
-        mm = pc.min_max(big.column("doc_id")).as_py()
-        wstat = stats.get("n_tok", {})
-        toks = int(wsum) if wcol == "n_tok" else big.num_rows
-        raw_b = toks * 4 if wcol == "n_tok" else int(big.nbytes)
-        enc_rows.append(pa.RecordBatch.from_arrays([
-            pa.array([pid], pa.int32()),
-            pa.array([chunk_idx], pa.int32()),
-            pa.array([big.num_rows], pa.int64()),
-            pa.array([toks], pa.int64()),
-            pa.array([raw_b], pa.int64()),
-            pa.array([len(blob)], pa.int64()),
-            pa.array([mm["min"]], pa.string()),
-            pa.array([mm["max"]], pa.string()),
-            pa.array([wstat.get("min")], pa.int64()),
-            pa.array([wstat.get("max")], pa.int64()),
-            pa.array([json.dumps(stats)], pa.string()),
-            pa.array([json.dumps(codecs)], pa.string()),
-            pa.array([bloom], pa.binary()),
-            pa.array([blob], pa.binary()),
-        ], schema=_ENC_ARROW_SCHEMA))
-        totals["rows"] += big.num_rows
-        totals["tokens"] += toks
-        totals["raw"] += raw_b
-        totals["enc"] += len(blob)
-        mins.append(mm["min"])
-        maxs.append(mm["max"])
-        chunk_idx += 1
-        buf, wsum = [], 0
-
-    for batch in iterator:
-        if batch.num_rows == 0:
-            continue
-        w = (int(pc.sum(batch.column("n_tok")).as_py() or 0)
-             if wcol == "n_tok" else batch.num_rows)
-        buf.append(batch)
-        wsum += w
-        if wsum >= max_vals:
-            flush()
-    flush()
-    if not enc_rows:
-        return PLCCommit(pid, None, 0, 0, 0, 0, 0, None, None)
-    pdir = pfs.join(rel, "data", f"part_id={pid}") if rel else \
-        pfs.join("data", f"part_id={pid}")
-    pfs.fs.create_dir(pdir, recursive=True)
-    fname = f"part-{pid:05d}-{jobid}-{_uuid.uuid4().hex[:12]}.parquet"
-    tbl = pa.Table.from_batches(enc_rows).drop_columns(["part_id"])
-    # one row group per partition slice so sliced readers touch only
-    # their own chunks' bytes (_read_selected)
-    with pfs.fs.open_output_stream(posixpath.join(pdir, fname)) as f:
-        pq.write_table(tbl, f, compression="none",
-                       row_group_size=_CHUNKS_PER_PART)
-    return PLCCommit(pid, fname, chunk_idx, totals["rows"],
-                     totals["tokens"], totals["raw"], totals["enc"],
-                     min(mins), max(maxs))
+    parts = pfs.join(rel, "_manifest", "parts")
+    pfs.fs.create_dir(parts, recursive=True)
+    pfs.publish_parquet(posixpath.join(
+        parts, f"manifest-{uuid.uuid4().hex[:12]}.parquet"),
+        _commit_table(commits))
+    named = _committed_entries(pfs, rel)
+    data_rel = posixpath.join(rel, "data")
+    try:
+        for st in pfs.listdir(data_rel):
+            name = posixpath.basename(st.path)
+            if not name.startswith("part_id="):
+                continue
+            try:
+                keep = named.get(int(name.split("=", 1)[1]), set())
+            except ValueError:
+                keep = set()  # foreign part_id= name: never committed
+            kept = False
+            for fi in pfs.listdir(posixpath.join(data_rel, name)):
+                base = posixpath.basename(fi.path)
+                if base.endswith(".parquet") and base not in keep:
+                    pfs.fs.delete_file(fi.path)
+                else:
+                    kept = True
+            if not kept:
+                pfs.fs.delete_dir(st.path)
+    except OSError:
+        pass
 
 
 def _commit_store(pfs: _PlanFS, rel: str, msgs: list, wcol: str,
@@ -1112,27 +1136,18 @@ def _commit_store(pfs: _PlanFS, rel: str, msgs: list, wcol: str,
     overwrite-in-place must never leave "neither old nor new data"):
 
     1. drop the OLD ``_manifest`` dir (present only when overwriting an
-       existing store in place; a pipeline-written store's manifest
-       part-files must not union with the new one). The unreadable
-       window this opens is a few driver-side milliseconds — versus the
-       previous design's delete-at-planning, which destroyed the old
-       store for the entire job duration;
-    2. write plan.json + the parts manifest that NAMES each winning
-       file — THE commit point; from here the new store is readable;
-    3. sweep every data file the new manifest does not name (the old
-       generation's files + losing/duplicate attempts) best-effort —
-       readers ignore unnamed files regardless, this only reclaims
-       bytes, and a crash mid-sweep leaves a valid store + orphans."""
-    import pyarrow as pa
-
-    def j(*parts):
-        return pfs.join(rel, *parts) if rel else pfs.join(*parts)
-
+       existing store in place). The unreadable window this opens is a
+       few driver-side milliseconds — versus the previous design's
+       delete-at-planning, which destroyed the old store for the entire
+       job duration;
+    2. write plan.json, then :func:`_publish_manifest`: the manifest
+       that names each winning file is the commit point, and its sweep
+       reclaims the old generation's files and losing attempts."""
     try:
-        pfs.fs.delete_dir(j("_manifest"))
+        pfs.fs.delete_dir(pfs.join(rel, "_manifest"))
     except OSError:
         pass
-    pfs.fs.create_dir(j("_manifest", "parts"), recursive=True)
+    pfs.fs.create_dir(pfs.join(rel, "_manifest", "parts"), recursive=True)
     plan = {
         "n_parts": (max((m.part_id for m in msgs), default=0) + 1),
         "bounds": [], "tau": 2**31 - 1, "weight_col": wcol,
@@ -1144,46 +1159,10 @@ def _commit_store(pfs: _PlanFS, rel: str, msgs: list, wcol: str,
         # fail loudly instead of silently encoding zero rows (ADVICE r5)
         "writer": "format",
     }
-    with pfs.fs.open_output_stream(j("_manifest", "plan.json")) as f:
+    with pfs.fs.open_output_stream(
+            pfs.join(rel, "_manifest", "plan.json")) as f:
         f.write(json.dumps(plan).encode("utf-8"))
-    man = pa.table({
-        "part_id": pa.array([m.part_id for m in msgs], pa.int32()),
-        "n_chunks": pa.array([m.n_chunks for m in msgs], pa.int64()),
-        "n_rows": pa.array([m.n_rows for m in msgs], pa.int64()),
-        "n_tokens": pa.array([m.n_tokens for m in msgs], pa.int64()),
-        "raw_bytes": pa.array([m.raw_bytes for m in msgs], pa.int64()),
-        "enc_bytes": pa.array([m.enc_bytes for m in msgs], pa.int64()),
-        "min_doc_id": pa.array([m.min_doc_id for m in msgs], pa.string()),
-        "max_doc_id": pa.array([m.max_doc_id for m in msgs], pa.string()),
-        # the commit point: readers open exactly these files and
-        # nothing else in the part dirs
-        "file": pa.array([m.file for m in msgs], pa.string()),
-    })
-    pfs.publish_parquet(j("_manifest", "parts", "manifest-0.parquet"), man)
-    # post-commit sweep: reclaim everything the new manifest does not
-    # name; a part dir left with no named file at all (stale pid from a
-    # replaced store) goes entirely
-    winners = {m.file for m in msgs if m.file}
-    data_rel = posixpath.join(rel, "data") if rel else "data"
-    try:
-        for st in pfs.listdir(data_rel):
-            name = posixpath.basename(st.path)
-            if not name.startswith("part_id="):
-                continue
-            kept = False
-            for fi in pfs.listdir(posixpath.join(data_rel, name)):
-                base = posixpath.basename(fi.path)
-                if base.endswith(".parquet") and base not in winners:
-                    pfs.fs.delete_file(fi.path)
-                else:
-                    kept = True
-            if not kept:
-                try:
-                    pfs.fs.delete_dir(st.path)
-                except OSError:
-                    pass
-    except OSError:
-        pass
+    _publish_manifest(pfs, rel, msgs)
 
 
 class PLCStreamWriter(DataSourceStreamArrowWriter):
@@ -1252,13 +1231,10 @@ class PLCStreamWriter(DataSourceStreamArrowWriter):
             # (rows, tokens, chunk count, doc_id min/max) — total_rows
             # alone is not enough, rate-limited sources produce
             # constant-size batches routinely (review finding r5).
-            mpath = self.pfs.join(rel, "_manifest", "parts",
-                                  "manifest-0.parquet")
-            old_tbl = pq.read_table(mpath, filesystem=self.pfs.fs)
-            old_fp = sorted(zip(*(old_tbl.column(c).to_pylist() for c in
-                                  ("part_id", "n_chunks", "n_rows",
-                                   "n_tokens", "min_doc_id",
-                                   "max_doc_id"))))
+            old_fp = sorted((r["part_id"], r["n_chunks"], r["n_rows"],
+                             r["n_tokens"], r["min_doc_id"],
+                             r["max_doc_id"])
+                            for r in _manifest_rows(self.pfs, rel))
             new_fp = sorted((m.part_id, m.n_chunks, m.n_rows, m.n_tokens,
                              m.min_doc_id, m.max_doc_id) for m in msgs)
             if old_fp != new_fp:
@@ -1321,9 +1297,7 @@ def gc(dst: str, *, grace_sec: float = 86400.0) -> dict:
 
     ``grace_sec`` protects in-flight work: only files older than the
     grace period go (a write job in progress has young files; default
-    24 h). Part dirs with glob semantics (pipeline-sink commits, where
-    every file in the dir IS data) are never touched. Returns
-    ``{"removed": [paths], "kept_young": n}``."""
+    24 h). Returns ``{"removed": [paths], "kept_young": n}``."""
     import time
 
     pfs = _PlanFS(dst)
@@ -1338,7 +1312,7 @@ def gc(dst: str, *, grace_sec: float = 86400.0) -> dict:
     def _sweep_root(rel: str) -> None:
         nonlocal kept_young
         committed = _committed_entries(pfs, rel)
-        data_rel = posixpath.join(rel, "data") if rel else "data"
+        data_rel = posixpath.join(rel, "data")
         try:
             part_dirs = pfs.listdir(data_rel)
         except OSError:
@@ -1352,8 +1326,6 @@ def gc(dst: str, *, grace_sec: float = 86400.0) -> dict:
             except ValueError:
                 pid = None
             names = committed.get(pid, set())
-            if names is None:
-                continue  # glob part: every file is data — never touch
             files = pfs.listdir(posixpath.join(data_rel, name))
             live = 0
             for fi in files:

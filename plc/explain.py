@@ -110,10 +110,11 @@ def main(out_path: str = "BENCH/PLANS.md") -> None:
     # explicit slices, data read by pyarrow inside the workers
     from plc.pipeline import encode_direct  # noqa: F401 (documented below)
     sections.append((
-        "E1-direct (descriptor scan → MapInArrow[pyarrow read + encode]; "
-        "no JVM scan, no token IPC, no Exchange)",
+        "E1-direct (descriptor scan → MapInArrow[pyarrow read + encode + "
+        "part-file write]; no JVM scan, no token IPC, no Exchange)",
         "See plc/pipeline.py encode_direct — the plan is "
-        "Scan ExistingRDD[file, groups] → MapInArrow → WriteFiles; "
+        "Scan ExistingRDD[file, groups] → MapInArrow → collect of the "
+        "commit rows; "
         "descriptors are parallelized with explicit numSlices so AQE "
         "cannot coalesce the fan-out."))
     with open(out_path, "w") as f:

@@ -1,28 +1,33 @@
 """Distributed encode/decode pipeline (SURVEY.md §2 P1-P7, §3 E1-E3).
 
 Spark-first layering per BASELINE.json north_rule:
-- *planning* is DataFrame-declarative: stats pre-pass (sampled quantiles),
-  explicit range partitioning by ``doc_id`` via ``repartitionByRange``,
-  salt-based skew splitting for long-token-array stragglers;
-- *encoding* is Arrow-vectorized: one ``mapInArrow`` stage running the
+- *planning* is DataFrame-declarative: one stats pre-pass (sampled range
+  bounds on ``doc_id`` plus the straggler threshold τ), then ONE exchange
+  that routes each row to its logical part, with salt-based skew
+  splitting for long-token-array stragglers;
+- *encoding* is Arrow-vectorized: ONE ``mapInArrow`` stage runs the
   chunk/codec kernels (plc.chunk) on whole RecordBatches — zero per-row
-  Python in the hot path;
-- *operational state* is per-partition lineage manifests written after the
-  data (commit-last), so interrupted runs resume from the last committed
-  partition via an anti-join (P6) and re-encodes are idempotent
-  (dynamic partition overwrite of ``part_id=`` directories).
+  Python in the hot path — and each task writes its parts' chunks
+  straight into its own named parquet files;
+- *operational state* is the manifest, which the driver publishes after
+  the data (commit-last). It names every committed part file, so readers
+  open only those files, interrupted runs resume from the committed parts
+  (P6), and the files of crashed runs or losing task attempts are swept.
 
 Scale notes (designed for ~100 TB / 1000 executors, tested on local[32]):
-- one shuffle total (the range repartition); everything after is map-side;
+- one shuffle total (the part exchange); everything after is map-side;
 - partition count: aim for ~256-512 MB of raw tokens per logical part —
   pass ``num_partitions`` explicitly or let the sampled row count choose;
-- the range shuffle uses Spark's RangePartitioner (JVM, sampled bounds);
-  our own persisted bounds give *deterministic* resume identity, and are
-  applied vectorized (np.searchsorted) inside the encoder, not per row;
+- the exchange hashes a plan-bounds comparison tree whose leaves are
+  Murmur3 slot tags, one part per reduce partition; past 128 bounds
+  Spark's sampled range exchange takes over, and a part may then span
+  tasks (each writes its own file). Our own persisted bounds give
+  *deterministic* resume identity, and are applied vectorized
+  (np.searchsorted) inside the encoder, not per row;
 - skewed rows (n_tok > τ = q0.999) get dedicated straggler partitions,
   salted by crc32(doc_id) — AQE skew handling does not cover mapInArrow
   stages, so the salt is explicit;
-- decode prunes chunks on manifest min/max doc_id (plain filters → parquet
+- decode prunes chunks on their min/max doc_id (plain filters → parquet
   row-group skipping; no custom Catalyst rule needed).
 """
 
@@ -30,12 +35,12 @@ from __future__ import annotations
 
 import json
 import os
-import posixpath
 from dataclasses import dataclass, field
 from functools import reduce
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import StructType
@@ -192,10 +197,11 @@ def _make_encoder(plan: dict, cfg: PipelineConfig):
     codec_cfg = cfg.codec
     max_vals = cfg.max_chunk_values
 
-    def encode_batches(batches):
+    def encode_batches(batches, part_id: int = 0):
         # Accumulate incoming Arrow batches per logical part until the token
         # cap is reached, so chunk size (and codec-table amortization) is
         # independent of spark.sql.execution.arrow.maxRecordsPerBatch.
+        # Without plan bounds every row belongs to ``part_id``.
         chunk_idx = 0
         buf: list[pa.RecordBatch] = []
         buf_part = -1
@@ -211,12 +217,8 @@ def _make_encoder(plan: dict, cfg: PipelineConfig):
             blob, codecs = pack_chunk(big, codec_cfg)
             stats = column_stats(big)
             bloom = split_bloom_stats(stats)
-            docs = big.column("doc_id")
             toks = buf_tokens
-            import pyarrow.compute as pc
-
-            mm = pc.min_max(docs).as_py() if big.num_rows else \
-                {"min": "", "max": ""}
+            mm = pc.min_max(big.column("doc_id")).as_py()
             wstat = stats.get("n_tok", {})
             # raw bytes: the contract metric is raw TOKEN bytes (int32) for
             # token tables; generic tables report Arrow LOGICAL bytes
@@ -245,13 +247,20 @@ def _make_encoder(plan: dict, cfg: PipelineConfig):
 
         wcol = plan.get("weight_col", "n_tok")
         for batch in batches:
-            docs = batch.column("doc_id").to_numpy(zero_copy_only=False)
-            n_tok = batch.column(wcol).to_numpy(zero_copy_only=False) \
-                .astype(np.int64)
-            if wcol == "_w":
-                batch = batch.drop_columns(["_w"])
-            part = (np.searchsorted(bounds, docs.astype(str), side="right")
-                    if bounds.size else np.zeros(len(docs), np.int64))
+            if not batch.num_rows:
+                continue
+            if wcol in batch.schema.names:
+                n_tok = pc.fill_null(batch.column(wcol), 0) \
+                    .to_numpy(zero_copy_only=False).astype(np.int64)
+                if wcol == "_w":
+                    batch = batch.drop_columns(["_w"])
+            else:  # generic table written without the _w column
+                n_tok = np.ones(batch.num_rows, np.int64)
+            if bounds.size:
+                docs = batch.column("doc_id").to_numpy(zero_copy_only=False)
+                part = np.searchsorted(bounds, docs.astype(str), side="right")
+            else:
+                part = np.full(batch.num_rows, part_id, np.int64)
             # straggler routing comes in as the JVM-computed _sbucket column
             # (1+crc32(doc_id)%k for rows over τ, 0 otherwise) — vectorized,
             # and bit-identical to the bucket the shuffle/resume side used
@@ -485,9 +494,11 @@ def _prepare_state(spark: SparkSession, df: DataFrame, dst: str,
 
     committed: set[int] = set()
     if resume and manifest_exists:
-        committed = {r[0] for r in
-                     spark.read.parquet(_manifest_path(dst))
-                     .select("part_id").distinct().collect()}
+        from plc.datasource import _committed_entries, _manifest_rows, _PlanFS
+
+        pfs = _PlanFS(dst)
+        _committed_entries(pfs, "")  # refuses a store with unnamed files
+        committed = {r["part_id"] for r in _manifest_rows(pfs, "")}
     return plan, committed
 
 
@@ -497,9 +508,9 @@ def encode(spark: SparkSession, df: DataFrame, dst: str,
     """E1 flagship entry: encode ``df`` (doc_id/tokens/n_tok/source shape)
     into ``dst`` with per-partition lineage manifests. Returns a report.
 
-    Lifecycle: plan (stats pre-pass) → range shuffle on salted doc_id →
-    mapInArrow encode → parquet sink (dynamic partition overwrite on
-    part_id → idempotent) → manifest append (the commit point).
+    Lifecycle: plan (stats pre-pass) → part exchange on salted doc_id →
+    mapInArrow encode, each task writing its own named part files →
+    manifest append (the commit point) → sweep of unnamed files.
     """
     cfg = cfg or PipelineConfig()
     from plc.util import ensure_shipped
@@ -521,7 +532,7 @@ def encode(spark: SparkSession, df: DataFrame, dst: str,
     total_parts = plan["n_parts"] + plan["straggler_parts"]
     pending_parts = total_parts - len(committed)
     if pending_parts <= 0:
-        return _report(spark, dst, plan, newly_encoded=0)
+        return _report(dst, plan, newly_encoded=0)
 
     # _sbucket travels into the encoder in both modes: the mapInArrow workers
     # read it for straggler routing (no Python-side hashing) and drop it
@@ -552,240 +563,63 @@ def encode(spark: SparkSession, df: DataFrame, dst: str,
         if cfg.sort_within:
             shuffled = shuffled.sortWithinPartitions("_sbucket", "doc_id")
 
-    enc = shuffled.mapInArrow(_make_encoder(plan, cfg), ENC_SCHEMA_DDL)
-    return _write_and_commit(spark, enc, dst, plan, committed, total_parts,
-                             pending_parts)
+    return _write_and_commit(shuffled, _make_encoder(plan, cfg), dst, plan,
+                             committed, pending_parts)
 
 
-def _write_and_commit(spark: SparkSession, enc: DataFrame, dst: str,
-                      plan: dict, committed: set[int], total_parts: int,
-                      pending_parts: int) -> dict:
-    """Shared sink: dynamic-partition-overwrite data write, then the
-    manifest append (the commit point), then the run report."""
+def _write_and_commit(src: DataFrame, encode_fn, dst: str, plan: dict,
+                      committed: set[int], pending_parts: int) -> dict:
+    """Shared sink of encode() and encode_direct(): ONE Spark job in which
+    each task encodes its rows (``encode_fn``: Arrow batches → chunk
+    batches) and writes its own named part files, fused into the same
+    ``mapInArrow`` (:func:`plc.datasource._write_parts`); the tasks'
+    commit rows come back to the driver, which publishes them plus the
+    zero-chunk markers of planned parts that got no data — without them
+    resume would re-run those parts forever — as one manifest file (the
+    commit point), then reports."""
     import time
+    import uuid
 
-    from plc import fsio
+    from pyspark.sql.pandas.types import from_arrow_schema
 
-    # pre-clean: part dirs written by a crashed earlier attempt but never
-    # committed must be deleted before the write — dynamic partition
-    # overwrite only rewrites parts that receive new data, so the manifest
-    # rollup (which reads the data dir) would otherwise adopt stale dirs.
-    # Enumerate the ACTUAL part_id=* dirs, not range(total_parts): a
-    # crashed format write leaves orphan dirs whose task-partition ids can
-    # exceed this plan's part count, and those would otherwise be silently
-    # adopted as committed data by the rollup (ADVICE r5)
-    if fsio.nonempty_dir(spark, _data_path(dst)):
-        for name in fsio.listdir(spark, _data_path(dst)):
-            if not name.startswith("part_id="):
-                continue
-            try:
-                pid = int(name.split("=", 1)[1])
-            except ValueError:
-                pid = -1  # foreign dir name: treat as uncommitted, drop it
-            if pid not in committed:
-                fsio.delete(spark, os.path.join(_data_path(dst), name))
+    from plc.datasource import (_COMMIT_SCHEMA, PLCCommit, _commit_table,
+                                _PlanFS, _publish_manifest, _write_parts)
+
+    pfs = _PlanFS(dst)
+    jobid = uuid.uuid4().hex[:12]
+
+    def encode_and_write(batches):
+        commits = list(_write_parts(pfs, "", jobid, encode_fn(batches)))
+        yield from _commit_table(commits).to_batches()
 
     t0 = time.perf_counter()
-    # 64 MB row groups (~4 full chunks): the format reader slices files
-    # into few-chunk partitions and reads only the row groups holding
-    # its chunks — one giant row group would force every slice to read
-    # the whole file
-    (enc.write.partitionBy("part_id").mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")  # write-scoped, not session
-        .option("parquet.block.size", str(64 << 20))
-        .option("compression", "uncompressed").parquet(_data_path(dst)))
+    commits = [PLCCommit(*r) for r in src.mapInArrow(
+        encode_and_write, from_arrow_schema(_COMMIT_SCHEMA)).collect()]
     data_path_sec = time.perf_counter() - t0
-
-    # manifest (commit point — written after the data, per part).
-    # Explicit schema: an empty input writes zero part directories, which
-    # would otherwise fail parquet schema inference. The roll-up is driver
-    # pyarrow over the metadata columns of the freshly written part files
-    # (thread-pooled, payload column never read) when the store is small
-    # enough to enumerate driver-side — zero Spark jobs; bigger stores
-    # (or exotic filesystems pyarrow can't resolve) fall back to the ONE
-    # Spark roll-up job. Zero-markers, the manifest write, and (on a
-    # fresh encode) the report totals are driver arithmetic either way.
-    man_rows = _rollup_driver(dst, committed)
-    if man_rows is None:
-        written = _read_enc(spark, dst)
-        man_rows = (written.groupBy("part_id")
-                    .agg(F.count("*").alias("n_chunks"),
-                         F.sum("n_rows").alias("n_rows"),
-                         F.sum("n_tokens").alias("n_tokens"),
-                         F.sum("raw_bytes").alias("raw_bytes"),
-                         F.sum("enc_bytes").alias("enc_bytes"),
-                         F.min("min_doc_id").alias("min_doc_id"),
-                         F.max("max_doc_id").alias("max_doc_id"))
-                    .collect())
-        man_rows = [tuple(r) for r in man_rows
-                    if r["part_id"] not in committed]
-    # zero-row commit markers for planned parts that produced no data (e.g.
-    # straggler parts with no rows over τ) — without them resume would
-    # re-run those parts forever instead of reaching a true no-op
-    present = {r[0] for r in man_rows}
-    man_rows += [(i, 0, 0, 0, 0, 0, None, None)
-                 for i in range(total_parts)
-                 if i not in present and i not in committed]
-    if not _write_manifest_driver(dst, man_rows, committed):
-        man = spark.createDataFrame(
-            man_rows,
-            "part_id int, n_chunks bigint, n_rows bigint, n_tokens bigint, "
-            "raw_bytes bigint, enc_bytes bigint, min_doc_id string, "
-            "max_doc_id string")
-        if committed:
-            # resuming a store whose manifest carries the format writer's
-            # `file` column: append with the same schema (file=NULL — the
-            # pipeline sink's parts read by dir, Spark's commit protocol
-            # already excludes orphans there)
-            existing = spark.read.parquet(_manifest_path(dst))
-            if "file" in existing.columns:
-                man = man.withColumn("file", F.lit(None).cast("string"))
-        man.write.mode("append").parquet(_manifest_path(dst))
-    if committed:
-        # resume: totals span prior manifests too — read them back
-        rep = _report(spark, dst, plan, newly_encoded=pending_parts)
-    else:
-        raw = sum(r[4] for r in man_rows)
-        enc_b = sum(r[5] for r in man_rows)
-        rep = {
-            "n_parts": plan["n_parts"] + plan["straggler_parts"],
-            "committed_parts": len(man_rows),
-            "newly_encoded": pending_parts,
-            "rows": sum(r[2] for r in man_rows),
-            "tokens": sum(r[3] for r in man_rows),
-            "raw_bytes": raw, "enc_bytes": enc_b,
-            "ratio": raw / enc_b if enc_b else 0.0,
-        }
+    written = {c.part_id for c in commits}
+    commits += [PLCCommit(i, None, 0, 0, 0, 0, 0, None, None)
+                for i in range(plan["n_parts"] + plan["straggler_parts"])
+                if i not in written and i not in committed]
+    _publish_manifest(pfs, "", commits)
+    rep = _report(dst, plan, newly_encoded=pending_parts)
     rep["data_path_sec"] = round(data_path_sec, 3)  # scan+shuffle+encode+write
     return rep
 
 
-# driver-side rollup/manifest fast path: at most this many freshly
-# written part files are enumerated and footer-read driver-side (32-way
-# thread pool, same shape as the format planner); past the cap the ONE
-# Spark roll-up job takes over — the cap bounds driver wall, not memory
-# (the rows read are O(chunks-metadata), payload never touched)
-_DRIVER_ROLLUP_MAX_FILES = 4096
-_MAN_PA_FIELDS = [("part_id", "int32"), ("n_chunks", "int64"),
-                  ("n_rows", "int64"), ("n_tokens", "int64"),
-                  ("raw_bytes", "int64"), ("enc_bytes", "int64"),
-                  ("min_doc_id", "string"), ("max_doc_id", "string")]
-_ROLLUP_COLS = ["n_rows", "n_tokens", "raw_bytes", "enc_bytes",
-                "min_doc_id", "max_doc_id"]
+def _report(dst: str, plan: dict, newly_encoded: int) -> dict:
+    """Run report from the manifest (driver pyarrow, no Spark job). A part
+    may span several files, so parts are counted, not rows."""
+    from plc.datasource import _manifest_rows, _PlanFS
 
-
-def _rollup_driver(dst: str, committed: set[int]) -> "list[tuple] | None":
-    """Per-part manifest roll-up computed driver-side with pyarrow over
-    the metadata columns of the freshly written part files (the payload
-    column is never read — parquet is columnar). Returns None when the
-    path doesn't resolve through pyarrow.fs or the file count exceeds
-    the driver cap, in which case the caller runs the Spark roll-up job.
-    Exactly mirrors the Spark job: all files of every non-committed
-    ``part_id=`` dir, aggregated per part."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    try:
-        from plc.datasource import _PlanFS
-
-        pfs = _PlanFS(dst)
-        if not pfs.exists("data"):
-            return []
-        pdirs = []
-        for st in pfs.listdir("data"):
-            name = posixpath.basename(st.path)
-            if not name.startswith("part_id="):
-                continue
-            try:
-                pid = int(name.split("=", 1)[1])
-            except ValueError:
-                continue
-            if pid not in committed:
-                pdirs.append((pid, posixpath.join("data", name)))
-        files: list[tuple[int, str]] = []
-        with ThreadPoolExecutor(max_workers=32) as pool:
-            for (pid, _), infos in zip(
-                    pdirs, pool.map(lambda t: pfs.listdir(t[1]), pdirs)):
-                files.extend((pid, st.path) for st in infos
-                             if st.path.endswith(".parquet"))
-            if len(files) > _DRIVER_ROLLUP_MAX_FILES:
-                return None
-
-            def read_one(t):
-                pid, fp = t
-                tbl = pfs.read_parquet(fp, _ROLLUP_COLS)
-                return pid, tbl
-
-            agg: dict[int, list] = {}
-            for pid, tbl in pool.map(read_one, files):
-                cols = {c: tbl.column(c).to_pylist() for c in _ROLLUP_COLS}
-                a = agg.setdefault(pid, [0, 0, 0, 0, 0, None, None])
-                a[0] += tbl.num_rows
-                a[1] += sum(cols["n_rows"])
-                a[2] += sum(cols["n_tokens"])
-                a[3] += sum(cols["raw_bytes"])
-                a[4] += sum(cols["enc_bytes"])
-                mns = [v for v in cols["min_doc_id"] if v is not None]
-                mxs = [v for v in cols["max_doc_id"] if v is not None]
-                if mns:
-                    a[5] = min(mns) if a[5] is None else min(a[5], *mns)
-                if mxs:
-                    a[6] = max(mxs) if a[6] is None else max(a[6], *mxs)
-        return [(pid, *agg[pid]) for pid in sorted(agg)]
-    except Exception:
-        return None
-
-
-def _write_manifest_driver(dst: str, man_rows: list, committed: set[int]
-                           ) -> bool:
-    """Append one manifest parquet file driver-side with pyarrow (no
-    Spark job) — the same rows/schema the Spark write produced, under a
-    unique name so mode-append semantics hold. Returns False on any
-    resolution/IO failure (caller falls back to the Spark write)."""
-    import uuid
-
-    import pyarrow.parquet as _pq
-
-    try:
-        from plc.datasource import _PlanFS
-
-        pfs = _PlanFS(dst)
-        with_file = False
-        if committed:
-            # resuming a store whose manifest carries the format writer's
-            # `file` column: append with the same schema (file=NULL)
-            for st in pfs.listdir(posixpath.join("_manifest", "parts")):
-                if st.path.endswith(".parquet"):
-                    sch = _pq.read_schema(st.path, filesystem=pfs.fs)
-                    with_file = "file" in sch.names
-                    break
-        fields = _MAN_PA_FIELDS + ([("file", "string")] if with_file else [])
-        cols = list(zip(*man_rows)) if man_rows else [[] for _ in
-                                                      _MAN_PA_FIELDS]
-        if with_file:
-            cols = list(cols) + [[None] * len(man_rows)]
-        tbl = pa.table({name: pa.array(list(vals), getattr(pa, t)())
-                        for (name, t), vals in zip(fields, cols)})
-        pfs.fs.create_dir(pfs.join("_manifest", "parts"), recursive=True)
-        pfs.publish_parquet(pfs.join(
-            "_manifest", "parts", f"manifest-{uuid.uuid4().hex[:12]}.parquet"),
-            tbl)
-        return True
-    except Exception:
-        return False
-
-
-def _report(spark: SparkSession, dst: str, plan: dict, newly_encoded: int) -> dict:
-    man = spark.read.parquet(_manifest_path(dst))
-    agg = man.agg(F.count("*").alias("parts"), F.sum("n_rows").alias("rows"),
-                  F.sum("n_tokens").alias("tokens"),
-                  F.sum("raw_bytes").alias("raw_bytes"),
-                  F.sum("enc_bytes").alias("enc_bytes")).collect()[0]
-    raw = agg["raw_bytes"] or 0
-    enc_b = agg["enc_bytes"] or 1
+    rows = _manifest_rows(_PlanFS(dst), "")
+    raw = sum(r["raw_bytes"] for r in rows)
+    enc_b = sum(r["enc_bytes"] for r in rows)
     return {
         "n_parts": plan["n_parts"] + plan["straggler_parts"],
-        "committed_parts": agg["parts"], "newly_encoded": newly_encoded,
-        "rows": agg["rows"], "tokens": agg["tokens"],
+        "committed_parts": len({r["part_id"] for r in rows}),
+        "newly_encoded": newly_encoded,
+        "rows": sum(r["n_rows"] for r in rows),
+        "tokens": sum(r["n_tokens"] for r in rows),
         "raw_bytes": raw, "enc_bytes": enc_b,
         "ratio": raw / enc_b if enc_b else 0.0,
     }
@@ -799,7 +633,8 @@ def encode_direct(spark: SparkSession, src_path: str, dst: str,
     mapInArrow — no JVM parquet scan and no Arrow IPC of the token data;
     the only Spark-side rows are tiny row-group descriptors. Same plan,
     encoder, sink, manifests, and resume semantics as
-    ``encode(shuffle="none")``.
+    ``encode(shuffle="none")``: a part whose row groups are spread over
+    several tasks lands in one file per task.
 
     Row-group scheduling: committed parts are pruned at row-group
     granularity via the parquet doc_id column statistics, and an exact
@@ -862,7 +697,7 @@ def encode_direct(spark: SparkSession, src_path: str, dst: str,
     total_parts = plan["n_parts"]
     pending_parts = total_parts - len(committed)
     if pending_parts <= 0:
-        return _report(spark, dst, plan, newly_encoded=0)
+        return _report(dst, plan, newly_encoded=0)
 
     # committed doc_id ranges (for rg pruning + exact row filtering)
     bounds = plan["bounds"]
@@ -915,7 +750,7 @@ def encode_direct(spark: SparkSession, src_path: str, dst: str,
         for i in range(0, len(keep), run_len):
             tasks.append((f, keep[i : i + run_len]))
     if not tasks:
-        return _report(spark, dst, plan, newly_encoded=0)
+        return _report(dst, plan, newly_encoded=0)
 
     # one Spark partition per task, WITHOUT a shuffle: a repartition() here
     # is a tiny exchange that AQE coalesces into a single partition
@@ -928,50 +763,40 @@ def encode_direct(spark: SparkSession, src_path: str, dst: str,
     wcol = plan.get("weight_col", "n_tok")
     cranges = committed_ranges
 
-    def direct_batches(desc_batches):
-        import pyarrow.compute as pc
+    def read_rows(desc_batches):
         import pyarrow.parquet as _pq
 
-        def gen():
-            for db in desc_batches:
-                for f, gs in zip(db.column("file").to_pylist(),
-                                 db.column("groups").to_pylist()):
-                    pf = _pq.ParquetFile(f)
-                    read_cols = [c for c in col_names
-                                 if c in pf.schema_arrow.names]
-                    for rb in pf.iter_batches(row_groups=list(gs),
-                                              batch_size=32768,
-                                              columns=read_cols):
-                        if wcol not in rb.schema.names:
-                            if "tokens" in rb.schema.names:
-                                lens = pc.coalesce(
-                                    pc.list_value_length(
-                                        rb.column("tokens")),
-                                    pa.scalar(0, pa.int32()))
-                            else:  # generic table: unit weight
-                                lens = pa.array(
-                                    np.ones(len(rb), dtype=np.int32))
-                            rb = rb.append_column(wcol, lens)
-                        if cranges:
-                            docs = rb.column("doc_id") \
-                                .to_numpy(zero_copy_only=False).astype(str)
-                            drop = np.zeros(len(rb), dtype=bool)
-                            for lo, hi in cranges:
-                                m = np.ones(len(rb), dtype=bool)
-                                if lo is not None:
-                                    m &= docs >= lo
-                                if hi is not None:
-                                    m &= docs < hi
-                                drop |= m
-                            if drop.any():
-                                rb = rb.filter(pa.array(~drop))
-                        if len(rb):
-                            yield rb
-        yield from enc_fn(gen())
+        for db in desc_batches:
+            for f, gs in zip(db.column("file").to_pylist(),
+                             db.column("groups").to_pylist()):
+                pf = _pq.ParquetFile(f)
+                read_cols = [c for c in col_names
+                             if c in pf.schema_arrow.names]
+                for rb in pf.iter_batches(row_groups=list(gs),
+                                          batch_size=32768,
+                                          columns=read_cols):
+                    if wcol == "n_tok" and wcol not in rb.schema.names:
+                        rb = rb.append_column(wcol, pc.coalesce(
+                            pc.list_value_length(rb.column("tokens")),
+                            pa.scalar(0, pa.int32())))
+                    if cranges:
+                        docs = rb.column("doc_id") \
+                            .to_numpy(zero_copy_only=False).astype(str)
+                        drop = np.zeros(len(rb), dtype=bool)
+                        for lo, hi in cranges:
+                            m = np.ones(len(rb), dtype=bool)
+                            if lo is not None:
+                                m &= docs >= lo
+                            if hi is not None:
+                                m &= docs < hi
+                            drop |= m
+                        if drop.any():
+                            rb = rb.filter(pa.array(~drop))
+                    if len(rb):
+                        yield rb
 
-    enc = desc.mapInArrow(direct_batches, ENC_SCHEMA_DDL)
-    return _write_and_commit(spark, enc, dst, plan, committed, total_parts,
-                             pending_parts)
+    return _write_and_commit(desc, lambda it: enc_fn(read_rows(it)), dst,
+                             plan, committed, pending_parts)
 
 
 # --------------------------------------------------------------------------
@@ -988,79 +813,53 @@ _COMMITTED_PATHS_MAX = 4096
 
 def _committed_enc_paths(spark: SparkSession, dst: str) -> "DataFrame | None":
     """Fast path for :func:`_committed_enc`: read the manifest driver-side
-    (pyarrow, O(parts)) and open EXACTLY the committed part dirs — or,
-    for format-written stores whose manifest names the winning file per
-    part, exactly those files (a zombie attempt's orphan is then never
-    even opened, strictly stronger than the name-filter join). Returns
-    None when the store needs the Spark-side plan (unresolvable path,
-    too many paths)."""
-    try:
-        from plc.datasource import _PlanFS, _committed_entries
+    (pyarrow, O(files)) and open EXACTLY the files it names — an orphan
+    of a zombie attempt is then never even opened. Returns None when the
+    store needs the Spark-side plan: a path pyarrow cannot resolve or
+    read, or too many paths for one scan."""
+    from plc.datasource import _committed_entries, _PlanFS
 
-        pfs = _PlanFS(dst)
-        entries = _committed_entries(pfs, "")
-        if not entries:
-            return spark.createDataFrame([], ENC_SCHEMA_DDL)
-        paths = []
-        for pid in sorted(entries):
-            names = entries[pid]
-            pdir = os.path.join(_data_path(dst), f"part_id={pid}")
-            if names is None:
-                paths.append(pdir)  # glob semantics: every file is data
-            else:
-                paths.extend(os.path.join(pdir, f) for f in sorted(names))
-        if len(paths) > _COMMITTED_PATHS_MAX:
-            return None
-        return (spark.read.option("basePath", _data_path(dst))
-                .parquet(*paths))
-    except Exception:
+    try:
+        entries = _committed_entries(_PlanFS(dst), "")
+    except (OSError, pa.ArrowInvalid):
         return None
+    if not entries:
+        return spark.createDataFrame([], ENC_SCHEMA_DDL)
+    paths = [os.path.join(_data_path(dst), f"part_id={pid}", f)
+             for pid in sorted(entries) for f in sorted(entries[pid])]
+    if len(paths) > _COMMITTED_PATHS_MAX:
+        return None
+    # the schema is known: passing it skips Spark's footer-reading
+    # schema-inference job on every read
+    return (spark.read.schema(ENC_SCHEMA_DDL)
+            .option("basePath", _data_path(dst)).parquet(*paths))
 
 
 def _committed_enc(spark: SparkSession, dst: str) -> DataFrame:
     """Encoded-chunk table restricted to committed data. Preferred shape:
-    a path-pinned scan of exactly the committed dirs/files
+    a path-pinned scan of exactly the manifest-named files
     (:func:`_committed_enc_paths` — no manifest Spark job, no join).
-    Fallback: manifest part_id semi-join, plus — for format-written
-    stores, whose manifest NAMES the winning data file per part — a
-    file-name filter so an orphan left in a part dir by a
-    zombie/speculative task attempt is invisible (the format writer
-    writes task files directly into part dirs on any pyarrow.fs target;
-    the manifest is the commit point). Parts with a NULL file
-    (pipeline-sink commits, where Spark's own commit protocol already
-    guarantees no orphans) keep reading every file in their dir. The
-    name list is O(committed parts), same scale as the semi-join side."""
+    Fallback: ONE broadcast left-semi join of the enc table on the
+    manifest's (part_id, file) rows, so an orphan left in a part dir by
+    a zombie/speculative task attempt stays invisible (the manifest is
+    the commit point). The join ships the O(files) manifest rows
+    JVM-side with zero driver wall — a collected literal ``isin()``
+    would marshal every name through py4j (ADVICE r5).
+    ``input_file_name()`` only resolves on a single-source plan, so the
+    name column is computed on the scan side before the join."""
     fast = _committed_enc_paths(spark, dst)
     if fast is not None:
         return fast
-    man = spark.read.parquet(_manifest_path(dst))
-    enc = _read_enc(spark, dst)
-    if "file" in man.columns:
-        # ONE broadcast left-semi join carries both the committed-part
-        # check and the file-name check: a (part_id, file) row names the
-        # winning file, file=NULL means "any file in this part dir"
-        # (pipeline-sink commits, where Spark's commit protocol already
-        # excludes orphans). The previous shape collected the manifest
-        # and built a literal isin() — O(parts) py4j-marshalled literals
-        # at plan time, the same ~0.5 ms/key pathology the doc_ids path
-        # fixed (ADVICE r5); the join ships the same rows JVM-side with
-        # zero driver wall. input_file_name() only resolves on a
-        # single-source plan, so the name column is computed on the scan
-        # side before the join.
-        keys = (man.select(F.col("part_id").alias("_mpid"),
-                           F.col("file").alias("_mfname")))
-        enc = (enc.withColumn("_fname",
-                              F.element_at(F.split(F.input_file_name(),
-                                                   "/"), -1))
-               .join(F.broadcast(keys),
-                     (F.col("part_id") == F.col("_mpid")) &
-                     (F.col("_mfname").isNull() |
-                      (F.col("_mfname") == F.col("_fname"))),
-                     "left_semi")
-               .drop("_fname"))
-        return enc
-    return enc.join(F.broadcast(man.select("part_id")), "part_id",
-                    "left_semi")
+    keys = (spark.read.parquet(_manifest_path(dst))
+            .select(F.col("part_id").alias("_mpid"),
+                    F.col("file").alias("_mfname")))
+    return (_read_enc(spark, dst)
+            .withColumn("_fname",
+                        F.element_at(F.split(F.input_file_name(), "/"), -1))
+            .join(F.broadcast(keys),
+                  (F.col("part_id") == F.col("_mpid")) &
+                  (F.col("_mfname") == F.col("_fname")), "left_semi")
+            .drop("_fname"))
 
 
 def _read_enc(spark: SparkSession, dst: str) -> DataFrame:
@@ -1118,8 +917,8 @@ def select_chunks(spark: SparkSession, dst: str, *,
                   doc_ids: list[str] | None = None
                   ) -> tuple[DataFrame, dict]:
     """Chunk-selection head shared by :func:`decode` and storage-pruning
-    tests: committed-part semi-join + doc_id bounds + per-chunk stats
-    pruning. Returns (pruned enc-chunk DataFrame, plan). Counting rows of
+    tests: the committed (manifest-named) files + doc_id bounds +
+    per-chunk stats pruning. Returns (pruned enc-chunk DataFrame, plan). Counting rows of
     the result shows exactly how many chunks a decode would touch.
 
     ``filters`` values are inclusive ``(lo, hi)`` tuples or LISTS of them
@@ -1379,9 +1178,9 @@ def decode(spark: SparkSession, dst: str, *, doc_id_min: str | None = None,
            columns: list[str] | None = None,
            filters: dict | None = None,
            doc_ids: list[str] | None = None) -> DataFrame:
-    """Read encoded chunks back as the original table. Only committed parts
-    are read (manifest semi-join); doc_id bounds prune chunks via the
-    min/max manifest columns (plain filter → parquet row-group skipping);
+    """Read encoded chunks back as the original table. Only the files the
+    manifest names are read; doc_id bounds prune chunks via their typed
+    min/max columns (plain filter → parquet row-group skipping);
     ``columns`` prunes at the storage level — unrequested column frames are
     skipped by length inside the chunk, never decoded.
 
@@ -1466,8 +1265,14 @@ def decode(spark: SparkSession, dst: str, *, doc_id_min: str | None = None,
 def metrics(spark: SparkSession, dst: str) -> DataFrame:
     """Per-partition lineage/compression metrics (P5 read side): one row
     per committed part with chunk counts, row/token totals, raw vs encoded
-    bytes and the resulting ratio — the operational dashboard query."""
-    man = spark.read.parquet(_manifest_path(dst))
+    bytes and the resulting ratio — the operational dashboard query. The
+    manifest has one row per part FILE, and a part may span files."""
+    man = (spark.read.parquet(_manifest_path(dst)).groupBy("part_id")
+           .agg(*[F.sum(c).alias(c) for c in ("n_chunks", "n_rows",
+                                              "n_tokens", "raw_bytes",
+                                              "enc_bytes")],
+                F.min("min_doc_id").alias("min_doc_id"),
+                F.max("max_doc_id").alias("max_doc_id")))
     return (man.withColumn(
         "ratio", F.when(F.col("enc_bytes") > 0,
                         F.round(F.col("raw_bytes") / F.col("enc_bytes"), 4)))
@@ -1517,7 +1322,7 @@ def _sampled_part_ranges(spark: SparkSession, dst: str, fraction: float,
     parts, and different seeds rotate coverage across runs."""
     import hashlib
 
-    rows = (spark.read.parquet(_manifest_path(dst))
+    rows = (metrics(spark, dst)
             .select("part_id", "min_doc_id", "max_doc_id")
             .filter(F.col("min_doc_id").isNotNull()).collect())
     if not rows:
@@ -1629,28 +1434,19 @@ def verify(spark: SparkSession, src: DataFrame, dst: str,
 
 def _manifest_sums_driver(dst: str) -> "dict | None":
     """raw/enc byte totals straight from the manifest parquet files
-    (driver pyarrow — the manifest is O(parts) rows; no Spark job).
-    None on any resolution failure → caller runs the Spark aggregate."""
+    (driver pyarrow — the manifest is O(files) rows; no Spark job). None
+    when the path does not resolve or holds no manifest row → caller
+    runs the Spark aggregate."""
+    from plc.datasource import _manifest_rows, _PlanFS
+
     try:
-        import pyarrow.compute as pc
-
-        from plc.datasource import _PlanFS
-
-        pfs = _PlanFS(dst)
-        raw = enc_b = 0
-        seen = False
-        for st in pfs.listdir(posixpath.join("_manifest", "parts")):
-            if not st.path.endswith(".parquet"):
-                continue
-            tbl = pfs.read_parquet(st.path, ["raw_bytes", "enc_bytes"])
-            raw += int(pc.sum(tbl.column("raw_bytes")).as_py() or 0)
-            enc_b += int(pc.sum(tbl.column("enc_bytes")).as_py() or 0)
-            seen = True
-        if not seen:
-            return None
-        return {"raw_bytes": raw, "enc_bytes": enc_b}
-    except Exception:
+        rows = _manifest_rows(_PlanFS(dst), "")
+    except (OSError, pa.ArrowInvalid):
         return None
+    if not rows:
+        return None
+    return {"raw_bytes": sum(r["raw_bytes"] for r in rows),
+            "enc_bytes": sum(r["enc_bytes"] for r in rows)}
 
 
 def _guard_vacuous(sample, sample_parts, n_src: int, n_dec: int) -> None:

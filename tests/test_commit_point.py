@@ -1,6 +1,6 @@
 """The manifest is the commit point of a store, so a crash while writing it
-must leave no readable manifest file: both driver-side manifest writers
-write a hidden temp file and move it into place."""
+must leave no readable manifest file: the one manifest publisher every
+writer shares writes a hidden temp file and moves it into place."""
 
 import glob
 import os
@@ -11,8 +11,8 @@ import pytest
 from pyspark.sql.types import StructType
 
 from plc import datasource
-from plc.datasource import PLCCommit, _commit_store, _PlanFS
-from plc.pipeline import _write_manifest_driver
+from plc.datasource import (PLCCommit, _commit_store, _PlanFS,
+                            _publish_manifest)
 
 
 class _CrashAfterFirstWrite:
@@ -104,10 +104,11 @@ def _manifest_parquets(dst):
 
 def test_pipeline_manifest_crash_leaves_no_manifest(tmp_path, crashing_fs):
     dst = str(tmp_path)
-    rows = [(0, 1, 10, 100, 400, 120, "doc-a", "doc-b"),
-            (1, 0, 0, 0, 0, 0, None, None)]
-    # the driver write fails (its caller falls back to the Spark write)
-    assert not _write_manifest_driver(dst, rows, committed=set())
+    commits = [PLCCommit(0, "part-00000-x.parquet", 1, 10, 100, 400, 120,
+                         "doc-a", "doc-b"),
+               PLCCommit(1, None, 0, 0, 0, 0, 0, None, None)]
+    with pytest.raises(OSError, match="injected crash"):
+        _publish_manifest(_PlanFS(dst), "", commits)
     assert _manifest_parquets(dst) == []
 
 
@@ -126,8 +127,10 @@ def test_manifest_publish_without_crash(tmp_path):
     """Without a crash the temp file is moved into place and none is left
     behind."""
     dst = str(tmp_path)
-    rows = [(0, 1, 10, 100, 400, 120, "doc-a", "doc-b")]
-    assert _write_manifest_driver(dst, rows, committed=set())
+    commits = [PLCCommit(0, "part-00000-x.parquet", 1, 10, 100, 400, 120,
+                         "doc-a", "doc-b")]
+    _publish_manifest(_PlanFS(dst), "", commits)
     parts = os.listdir(os.path.join(dst, "_manifest", "parts"))
     assert len(parts) == 1 and parts[0].endswith(".parquet"), parts
-    assert datasource._committed_entries(_PlanFS(dst), "") == {0: None}
+    assert datasource._committed_entries(_PlanFS(dst), "") == \
+        {0: {"part-00000-x.parquet"}}
