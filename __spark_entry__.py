@@ -688,8 +688,9 @@ def _packing_stats(spark, sf):
 def _point_lookup(spark, sf):
     """K24 + storage path end-to-end: encode the tokens view into the
     engine's store, then decode exactly one doc_id back out through
-    bloom + min/max chunk pruning (plc/pipeline.py select_chunks /
-    _bloom_probe_expr). An absent probe (present range, bloom-excluded)
+    min/max + bloom chunk pruning, settled on the driver before the scan
+    (plc/pipeline.py select_chunks → plc/datasource.py
+    PLCReader.select). An absent probe (present range, bloom-excluded)
     must touch zero rows — folded in as n_miss. The oracle recomputes the
     same row straight from the documents table, so the store's point-read
     path is DuckDB-checked end-to-end."""
@@ -712,10 +713,11 @@ def _point_lookup(spark, sf):
 def _batch_lookup(spark, sf):
     """Batch point lookup (IN-list, VERDICT r3 #3): encode the tokens view,
     then fetch a scattered key set (doc_id % 97 == 5 — reproducible in
-    SQL) in ONE pruned scan via decode(doc_ids=...): chunk selection is a
-    broadcast (key, bloom-hash) semi-join, not one decode per key. The
-    same keys shifted out of existence must prune EVERY chunk (asserted —
-    bloom + range), and their decode returns zero rows (n_miss)."""
+    SQL) in ONE pruned scan via decode(doc_ids=...): the driver keeps
+    the chunks whose range and bloom admit a key, not one decode per
+    key. The same keys shifted out of existence must prune EVERY chunk
+    (asserted — bloom + range), and their decode returns zero rows
+    (n_miss)."""
     from plc.pipeline import PipelineConfig, decode, encode, select_chunks
 
     src = tokens_view(spark, sf)

@@ -920,10 +920,9 @@ _STAT_PREFIX = 64  # string min/max stored as parquet-style bounded prefixes
 # doc_id bloom filter (parquet row-group-bloom analogue): point lookups can
 # prune chunks whose min/max range overlaps the probe but which provably do
 # not contain it. Double hashing from two byte-polynomial hashes; 31-bit
-# h1/h2 keep every (h1 + i*h2) sum far from int64 overflow on both numpy
-# and the JVM. The hash only has to agree between this module's builder
-# and probes (the JVM probe receives driver-computed h1/h2 literals), so a
-# vectorizable polynomial beats per-value md5 on the encode hot path.
+# h1/h2 keep every (h1 + i*h2) sum far from int64 overflow. The hash only
+# has to agree between this module's builder and probe, so a vectorizable
+# polynomial beats per-value md5 on the encode hot path.
 _BLOOM_K = 7
 _BLOOM_MIN_BITS = 1 << 13
 _BLOOM_MAX_BITS = 1 << 21
@@ -936,19 +935,6 @@ _BLOOM_SCAN_CAP = 256  # bytes hashed per value; total length mixed in last
 # always-survive, never be bit-tested (a silent false negative would drop
 # a chunk a point decode needs). Bump when the hash arithmetic changes.
 _BLOOM_V = 2
-
-
-def _bloom_hashes(v: str) -> tuple[int, int]:
-    """Scalar twin of :func:`_bloom_hash_arrays` — must stay arithmetic-
-    identical (the no-false-negative property test covers the pair)."""
-    b = v.encode("utf-8")
-    h1 = h2 = 0
-    for c in b[:_BLOOM_SCAN_CAP]:
-        h1 = (h1 * _BLOOM_B1 + c + 1) % _BLOOM_M
-        h2 = (h2 * _BLOOM_B2 + c + 1) % _BLOOM_M
-    h1 = (h1 * _BLOOM_B1 + len(b) % _BLOOM_M + 1) % _BLOOM_M
-    h2 = ((h2 * _BLOOM_B2 + len(b) % _BLOOM_M + 1) % _BLOOM_M) | 1
-    return h1, h2
 
 
 def _bloom_hash_arrays(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
@@ -1004,7 +990,17 @@ def _bloom_build(col: pa.Array, bits_per_key: int = 10) -> dict | None:
 
 def bloom_might_contain(st: dict, value: str,
                         raw_bits: "bytes | None" = None) -> bool:
-    """Pure-Python probe of a column_stats bloom entry; missing or
+    """Probe of a column_stats bloom entry for one value (see
+    :func:`bloom_might_contain_any`)."""
+    return bloom_might_contain_any(
+        st, *_bloom_hash_arrays(pa.array([value], pa.string())), raw_bits)
+
+
+def bloom_might_contain_any(st: dict, h1: np.ndarray, h2: np.ndarray,
+                            raw_bits: "bytes | None" = None) -> bool:
+    """True when some value hashed to ``(h1[i], h2[i])`` by
+    :func:`_bloom_hash_arrays` might be in a column_stats bloom entry:
+    one gather over every value's K bit positions. Missing or
     foreign-parameter blooms always pass (pruning stays a superset).
     ``raw_bits`` supplies the bloom payload for new-layout stores, where
     the bits live in the dedicated enc-table ``bloom`` column and the
@@ -1019,12 +1015,9 @@ def bloom_might_contain(st: dict, value: str,
             or st.get("bloom_v") != _BLOOM_V:
         return True
     bits = np.frombuffer(raw_bits, dtype=np.uint8)
-    h1, h2 = _bloom_hashes(value)
-    for i in range(_BLOOM_K):
-        pos = (h1 + i * h2) & (m - 1)
-        if not (bits[pos >> 3] >> (pos & 7)) & 1:
-            return False
-    return True
+    pos = (h1[:, None] + np.arange(_BLOOM_K, dtype=np.int64) * h2[:, None]) \
+        & (m - 1)
+    return bool(((bits[pos >> 3] >> (pos & 7)) & 1).all(axis=1).any())
 
 
 def _truncate_min(s: str) -> str:

@@ -11,12 +11,15 @@ and Catalyst drives the storage layer exactly like a built-in format:
 - **column pruning**: the reader receives Spark's pruned schema; chunk
   frames for unrequested columns are skipped by length, never decoded;
 - **filter pushdown**: :meth:`PLCReader.pushFilters` translates range/
-  equality predicates into per-chunk stat pruning (same semantics as
-  :func:`plc.pipeline.select_chunks` — doc_id bounds, typed weight-column
-  stats, stats-JSON min/max incl. temporal columns with the ±26 h tz
-  slack). Every filter is also returned as unsupported, so Spark
-  re-applies the exact predicate on the decoded rows — pruning is a
-  conservative superset and can never change results;
+  equality predicates into per-chunk stat pruning — doc_id bounds and
+  bloom probes, typed weight-column stats, stats-JSON min/max incl.
+  temporal columns with the ±26 h tz slack. :meth:`PLCReader.select`
+  is also how :func:`plc.pipeline.select_chunks` picks chunks for
+  doc_id probe keys, and :meth:`PLCReader.candidate_files` how it drops
+  files for doc_id ranges, so the two readers share one pruning
+  implementation. Every filter is also returned as unsupported, so
+  Spark re-applies the exact predicate on the decoded rows — pruning is
+  a conservative superset and can never change results;
 - **committed-files isolation**: only the data files the manifest names
   are opened, so uncommitted part directories (a crashed encode) and
   orphans of losing task attempts are invisible, like
@@ -32,11 +35,12 @@ py4j: the Python DataSource planner runs without a JVM gateway, so the
 through ``pyarrow.fs`` instead — a plain path, a ``file:`` URI, or any
 URI pyarrow resolves (``s3://``, ``hdfs://``, ``gs://``) all work, and
 the same (fs, path) travels in the partition descriptors so executors
-open files through the identical abstraction. Per-file metadata reads fan
-out on a thread pool (pyarrow releases the GIL on I/O), and the planner
-reads only the cheap typed min/max columns — the stats JSON (which
-carries up-to-256 KB blooms per chunk) is fetched lazily, per file, only
-when a chunk survives range pruning AND a pushed filter actually needs a
+open files through the identical abstraction. The manifest's per-file
+doc_id range drops files before any is opened; per-file metadata reads
+of the rest fan out on a thread pool (pyarrow releases the GIL on I/O),
+and the planner reads only the cheap typed min/max columns — the stats
+JSON and the bloom column are fetched lazily, per file, only when a
+chunk survives range pruning AND a pushed filter actually needs a
 stats/bloom test. Reads yield Arrow RecordBatches — the whole path is
 vectorized end to end.
 """
@@ -51,6 +55,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 
 from dataclasses import asdict, dataclass
+from typing import NamedTuple
 
 from pyspark.sql.datasource import (DataSource, DataSourceArrowWriter,
                                     DataSourceReader,
@@ -210,15 +215,16 @@ def _manifest_rows(pfs: _PlanFS, rel: str) -> list[dict]:
     return rows
 
 
-def _committed_entries(pfs: _PlanFS, rel: str) -> "dict[int, set[str]]":
-    """Committed part_id → the data file names the manifest lists for it.
-    The names are the commit point: a zombie or speculative attempt's
-    file lands in the part dir but is never named here, so readers open
-    ONLY the named files. Zero-chunk markers are left out (they have no
-    data dir to open). A non-empty part without a file name comes from a
-    store written before every writer named its files; there is no safe
-    way to tell its data from orphans, so it raises."""
-    out: dict[int, set[str]] = {}
+def _committed_rows(pfs: _PlanFS, rel: str) -> list[dict]:
+    """The manifest rows of every committed data file: one per named file,
+    carrying its part_id and its [min_doc_id, max_doc_id]. The names are
+    the commit point: a zombie or speculative attempt's file lands in the
+    part dir but is never named here, so readers open ONLY the named
+    files. Zero-chunk markers are left out (they have no data dir to
+    open). A non-empty part without a file name comes from a store
+    written before every writer named its files; there is no safe way to
+    tell its data from orphans, so it raises."""
+    out = []
     for r in _manifest_rows(pfs, rel):
         if not r["n_chunks"]:
             continue
@@ -227,6 +233,15 @@ def _committed_entries(pfs: _PlanFS, rel: str) -> "dict[int, set[str]]":
                 f"plc store {pfs.join(rel)}: committed part "
                 f"{r['part_id']} has no data file name in its manifest "
                 f"(written by an older plc); re-encode the store")
+        out.append(r)
+    return out
+
+
+def _committed_entries(pfs: _PlanFS, rel: str) -> "dict[int, set[str]]":
+    """Committed part_id → the data file names the manifest lists for it
+    (see :func:`_committed_rows`)."""
+    out: dict[int, set[str]] = {}
+    for r in _committed_rows(pfs, rel):
         out.setdefault(r["part_id"], set()).add(r["file"])
     return out
 
@@ -263,19 +278,21 @@ def _store_roots(pfs: _PlanFS, path: str,
     return roots
 
 
-def _committed_data_files(pfs: _PlanFS, roots: list[str],
-                          pool) -> list[str]:
+def _committed_data_files(pfs: _PlanFS, roots: list[str], pool=None,
+                          keep=None) -> list[str]:
     """Full paths of every COMMITTED encoded parquet file under the given
     roots: exactly the manifest-named files (no dir listing — an orphan
     from a zombie or losing speculative attempt in the same dir is
-    invisible, and planning skips one listdir round-trip per part)."""
+    invisible, and planning skips one listdir round-trip per part).
+    ``keep`` filters on the file's manifest row before any file is
+    opened; ``pool`` fans the manifest reads of several roots out."""
     files: list[str] = []
-    for rel, entries in zip(roots, pool.map(
-            lambda r: _committed_entries(pfs, r), roots)):
-        for pid in sorted(entries):
-            pdir = pfs.join(rel, "data", f"part_id={pid}")
-            files.extend(posixpath.join(pdir, f)
-                         for f in sorted(entries[pid]))
+    for rel, rows in zip(roots, (pool.map if pool is not None else map)(
+            lambda r: _committed_rows(pfs, r), roots)):
+        named = {(r["part_id"], r["file"]) for r in rows
+                 if keep is None or keep(r)}
+        files.extend(pfs.join(rel, "data", f"part_id={pid}", f)
+                     for pid, f in sorted(named))
     return files
 
 
@@ -355,6 +372,15 @@ class PLCChunkPartition(InputPartition):
         self.filters = filters  # option-supplied multi-ranges, row-exact
 
 
+class ChunkSelection(NamedTuple):
+    """The chunks of one encoded file that survive pruning."""
+
+    file: str              # full path within the store's filesystem
+    rows: list[int]        # row indices of the surviving chunks
+    chunk_idx: list[int]   # their chunk_idx values
+    typed_exact: bool      # typed min/max pruning alone keeps exactly these
+
+
 class PLCReader(DataSourceReader):
     """``filters_opt`` (the ``.option("filters", json)`` escape hatch):
     the Python DataSource pushdown API only ever delivers a flat
@@ -396,6 +422,7 @@ class PLCReader(DataSourceReader):
         self.notnull_cols: set[str] = set()  # IsNotNull pushdowns
         self.isnull_cols: set[str] = set()   # IsNull pushdowns
         self.opt_ranges: dict[str, list[tuple]] = {}
+        self._probe_hashes = None  # bloom hashes of _doc_probes(), once
         if filters_opt:
             from plc.pipeline import _normalize_ranges
 
@@ -459,7 +486,7 @@ class PLCReader(DataSourceReader):
                     self._tighten(f.attribute[0], lo=min(vals),
                                   hi=max(vals))
                     if f.attribute[0] == "doc_id":
-                        self.doc_in = [str(v) for v in vals]
+                        self.doc_in = sorted({str(v) for v in vals})
             elif isinstance(f, IsNotNull) and len(f.attribute) == 1 \
                     and f.attribute[0] in self.col_types:
                 # stats carry per-column null counts: an all-null chunk
@@ -474,8 +501,8 @@ class PLCReader(DataSourceReader):
     # -- planning ----------------------------------------------------------
 
     def _doc_probes(self) -> list[str]:
-        """doc_id keys needing a per-chunk bloom test (exact probe via
-        lo==hi bounds, or a pushed IN list)."""
+        """Sorted doc_id keys needing a per-chunk bloom test (exact probe
+        via lo==hi bounds, or a pushed IN list)."""
         lo, hi = self.bounds.get("doc_id", (None, None))
         if self.doc_in is not None:
             return self.doc_in
@@ -533,23 +560,41 @@ class PLCReader(DataSourceReader):
                 return False
         return True
 
+    def _survives_probes(self, meta: dict, stats: "dict | None" = None,
+                         bloom_bits: "bytes | None" = None) -> bool:
+        """doc_id probe test: some probe key lies inside ``meta``'s
+        [min_doc_id, max_doc_id] — a chunk's typed columns or a file's
+        manifest row — and, when the chunk's ``stats`` are given, passes
+        its bloom. True when nothing is probed."""
+        probes = self._doc_probes()
+        if not probes:
+            return True
+        import bisect
+
+        from plc.chunk import _bloom_hash_arrays, bloom_might_contain_any
+
+        mn, mx = meta["min_doc_id"], meta["max_doc_id"]
+        lo = 0 if mn is None else bisect.bisect_left(probes, mn)
+        hi = len(probes) if mx is None else bisect.bisect_right(probes, mx)
+        if stats is None or lo >= hi:
+            return lo < hi
+        if self._probe_hashes is None:
+            # hashed once per reader, vectorized; concurrent planning
+            # threads at worst compute the same arrays twice
+            self._probe_hashes = _bloom_hash_arrays(
+                pa.array(probes, pa.string()))
+        h1, h2 = self._probe_hashes
+        return bloom_might_contain_any(stats.get("doc_id", {}), h1[lo:hi],
+                                       h2[lo:hi], bloom_bits)
+
     def _survives_stats(self, stats: dict, meta: dict,
                         bloom_bits: "bytes | None" = None) -> bool:
         """Stats-JSON pruning for range-surviving chunks: generic/temporal
         min-max plus the doc_id bloom probe(s). ``bloom_bits`` carries the
         new-layout dedicated-column bloom payload (None for pre-split
         stores, where the bits are embedded in the stats JSON)."""
-        probes = self._doc_probes()
-        if probes:
-            from plc.chunk import bloom_might_contain
-
-            st = stats.get("doc_id", {})
-            mn, mx = meta["min_doc_id"], meta["max_doc_id"]
-            if not any(
-                    (mn is None or v >= mn) and (mx is None or v <= mx)
-                    and bloom_might_contain(st, v, bloom_bits)
-                    for v in probes):
-                return False
+        if not self._survives_probes(meta, stats, bloom_bits):
+            return False
         for col, (lo, hi) in self.bounds.items():
             if col == "doc_id" or (col == self.wcol and self.wcol != "_w"):
                 continue  # already settled by _survives_range
@@ -597,16 +642,23 @@ class PLCReader(DataSourceReader):
                 return False
         return True
 
-    def _plan_file(self, fpath: str) -> "list[PLCChunkPartition]":
+    def _survives_file(self, row: dict) -> bool:
+        """Manifest-row pruning of a whole file: its [min_doc_id,
+        max_doc_id] must meet the doc_id bounds and some probe key."""
+        meta = {"min_doc_id": row["min_doc_id"],
+                "max_doc_id": row["max_doc_id"], "min_w": None,
+                "max_w": None}
+        return self._survives_range(meta) and self._survives_probes(meta)
+
+    def _plan_file(self, fpath: str) -> ChunkSelection:
         """Prune one encoded file's chunks: read ONLY the typed range
-        columns first; fetch the stats JSON (which carries the blooms)
-        iff some chunk survives ranges and a pushed filter needs it.
-        Surviving chunks are sliced into partitions of ≤ _CHUNKS_PER_PART
-        so scan parallelism tracks data volume, not file count."""
+        columns first; fetch the stats JSON (and the bloom column) iff
+        some chunk survives ranges and a pushed filter needs it."""
         meta = self.pfs.read_parquet(fpath, _RANGE_COLS)
         rows = [{c: meta.column(c)[i].as_py() for c in _RANGE_COLS}
                 for i in range(meta.num_rows)]
-        keep = [i for i, m in enumerate(rows) if self._survives_range(m)]
+        ranged = [i for i, m in enumerate(rows) if self._survives_range(m)]
+        keep = ranged
         if keep and self._needs_stats():
             # new-layout stores keep the bloom bits in their own column
             # (fetched only when a doc_id probe needs them — the stats
@@ -627,23 +679,40 @@ class PLCReader(DataSourceReader):
                     if self._survives_stats(
                         json.loads(stats[i].as_py()), rows[i],
                         blooms[i].as_py() if blooms is not None else None)]
-        return [PLCChunkPartition(self.pfs, fpath,
-                                  keep[i : i + _CHUNKS_PER_PART],
-                                  self.opt_ranges or None)
-                for i in range(0, len(keep), _CHUNKS_PER_PART)]
+        return ChunkSelection(fpath, keep,
+                              [rows[i]["chunk_idx"] for i in keep],
+                              len(keep) == len(ranged))
 
-    def partitions(self):
-        # listing + per-file metadata reads fan out on a thread pool
-        # (pyarrow releases the GIL on I/O): at 10^5 part files a serial
-        # footer walk puts minutes of driver wall before the first task
+    def candidate_files(self, pool=None) -> list[str]:
+        """The committed files whose manifest row meets the doc_id bounds
+        and some probe key: read from the manifests, no data file
+        opened."""
+        return _committed_data_files(self.pfs, self.roots, pool,
+                                     self._survives_file)
+
+    def select(self) -> "list[ChunkSelection]":
+        """Driver-side chunk selection, shared by :meth:`partitions` and
+        :func:`plc.pipeline.select_chunks`: only the
+        :meth:`candidate_files` have their chunks pruned by
+        :meth:`_plan_file`. Returns the files that keep a chunk."""
+        # per-file metadata reads fan out on a thread pool (pyarrow
+        # releases the GIL on I/O): at 10^5 part files a serial footer
+        # walk puts minutes of driver wall before the first task
         from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(max_workers=_PLAN_THREADS) as pool:
-            files = _committed_data_files(self.pfs, self.roots, pool)
-            out: list[PLCChunkPartition] = []
-            for plist in pool.map(self._plan_file, files):
-                out.extend(plist)
-        return out
+            return [s for s in pool.map(self._plan_file,
+                                        self.candidate_files(pool))
+                    if s.rows]
+
+    def partitions(self):
+        # surviving chunks are sliced into partitions of ≤ _CHUNKS_PER_PART
+        # so scan parallelism tracks data volume, not file count
+        return [PLCChunkPartition(self.pfs, s.file,
+                                  s.rows[i : i + _CHUNKS_PER_PART],
+                                  self.opt_ranges or None)
+                for s in self.select()
+                for i in range(0, len(s.rows), _CHUNKS_PER_PART)]
 
     # -- execution (one task per encoded file) ------------------------------
 

@@ -54,8 +54,8 @@ def main(out_path: str = "BENCH/PLANS.md") -> None:
          "tree → sort → MapInArrow; r7 — no RangePartitioner sampling "
          "pass)",
          fmt(enc_df)),
-        ("E2 decode with doc_id bounds (PushedFilters on manifest min/max, "
-         "broadcast committed-parts semi-join)",
+        ("E2 decode with doc_id bounds (the manifest rows pick the "
+         "files; PushedFilters on the typed chunk min/max)",
          fmt(decode(spark, dst, doc_id_min="doc-000000000100",
                     doc_id_max="doc-000000000199"))),
         ("E2 decode with n_tok stats filter (typed min_w/max_w chunk "
@@ -79,19 +79,17 @@ def main(out_path: str = "BENCH/PLANS.md") -> None:
 
     probe = "doc-000000000123"
     sections.append((
-        "Point lookup chunk selection (committed-parts broadcast semi-join "
-        "+ min/max range + bloom bit-test, all JVM expressions over the "
-        "stats JSON)",
+        "Point lookup chunk selection (chosen on the driver from the "
+        "manifest rows, the typed min/max columns and the bloom column: "
+        "a scan of only the surviving files, typed min/max filters kept "
+        "for row-group skipping, no join)",
         fmt(select_chunks(spark, dst, filters={"doc_id": (probe, probe)})[0])))
     keys = [f"doc-{i:012d}" for i in (3, 57, 123, 999)]
     sections.append((
-        "Batch point lookup (doc_id IN-list): ONE broadcast semi-join "
-        "against the (key, bloom-h1, bloom-h2, candidate-part) table — "
-        "an EQUI-join on part_id (each key maps to its range part + "
-        "crc32 straggler part via the encoder's own routing arithmetic, "
-        "r6) with range overlap + bloom bit-test as the residual, so "
-        "condition evals are O(overlapping pairs) at any chunk/key "
-        "count; N keys = one pruned scan, never N decodes",
+        "Batch point lookup (doc_id IN-list): the same driver selection "
+        "for every key, one scan of the surviving files; a broadcast "
+        "semi-join on the file name (and chunk_idx) appears only when "
+        "the typed filters would keep a chunk the driver rejected",
         fmt(select_chunks(spark, dst, doc_ids=keys)[0])))
     sections.append((
         "Multi-range chunk selection (OR of (lo,hi) ranges in one scan — "

@@ -422,6 +422,28 @@ def test_bloom_version_gate():
     assert bloom_might_contain(legacy, "gamma")  # pre-versioning: survives
 
 
+def test_bloom_probe_of_a_key_set():
+    """The vectorized key-set probe agrees with probing each key alone:
+    True iff some key passes, with the keys hashed once up front."""
+    from plc.chunk import (_bloom_build, _bloom_hash_arrays,
+                           bloom_might_contain, bloom_might_contain_any)
+
+    ids = [f"doc-{i:09d}" for i in range(3000)]
+    st = _bloom_build(pa.array(ids))
+    keys = ids[::101] + [f"zzz-{i}" for i in range(300)]
+    h1, h2 = _bloom_hash_arrays(pa.array(keys))
+    one = [bloom_might_contain(st, k) for k in keys]
+    assert all(one[:len(ids[::101])])
+    for lo, hi in ((0, 5), (len(keys) - 300, len(keys)), (20, 40),
+                   (len(keys) - 1, len(keys)), (3, 3)):
+        assert bloom_might_contain_any(st, h1[lo:hi], h2[lo:hi]) \
+            == any(one[lo:hi]), (lo, hi)
+    # absent keys alone: some prune, like the scalar probe
+    assert not all(one[-300:])
+    stale = {**st, "bloom_v": -1}
+    assert bloom_might_contain_any(stale, h1[-3:], h2[-3:])
+
+
 def test_var_array_large_offset_fallback(monkeypatch):
     """The int32 zero-copy fast path in decode_frame covers every plane
     the default 256Ki-value chunk cap can produce; the >2 GiB large-

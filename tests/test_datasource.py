@@ -395,7 +395,9 @@ def test_pruning_equivalence_with_select_chunks(spark):
     """Review fix companion: the DataSource's Python chunk-survival
     predicate and pipeline.select_chunks' Column expressions must prune
     IDENTICAL chunk sets for the same bounds (doc_id range, weight range,
-    and a temporal range) — shared constants, cross-checked here."""
+    and a temporal range) — shared constants, cross-checked here. The
+    doc_id cases (probes, key sets, multi-ranges) are then checked on
+    three store layouts, rows against a pyarrow filter of the source."""
     import datetime
 
     from plc.datasource import PLCReader, _load_plan
@@ -435,6 +437,105 @@ def test_pruning_equivalence_with_select_chunks(spark):
             assert n_ds == n_pipeline, (filt, n_ds, n_pipeline)
     finally:
         shutil.rmtree(dst, ignore_errors=True)
+    # doc_id probes, key sets and multi-ranges, settled on the driver by
+    # both readers, on three store layouts
+    work = tempfile.mkdtemp(prefix="plc_eq_doc_")
+    try:
+        for dst, tbl in _doc_id_layouts(spark, work):
+            _check_doc_id_pruning(spark, dst, tbl)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
+def _doc_id_layouts(spark, work):
+    """(store, source table) for three layouts: a pipeline store with
+    straggler parts and several chunks per file, a format-written store
+    of unsorted partitions, and a store whose parts span several files."""
+    import pyarrow.parquet as _pq
+
+    from plc import data as D
+    from plc.datasource import register
+
+    src = os.path.join(work, "tokens.parquet")
+    D.synth_tokens_parquet(src, 600, regime="zipf", seed=29)
+    tbl = _pq.read_table(src)
+    df = spark.read.parquet(src)
+    strag = os.path.join(work, "stragglers")
+    encode(spark, df, strag,
+           PipelineConfig(num_partitions=4, straggler_parts=2,
+                          skew_quantile=0.9, max_chunk_values=5_000),
+           mode="overwrite")
+    assert glob.glob(os.path.join(strag, "data", "part_id=[45]",
+                                  "*.parquet")), "no straggler rows"
+    register(spark)
+    fmt = os.path.join(work, "format")
+    (df.repartition(3).write.format("plc")
+       .option("max_chunk_values", 5_000).mode("overwrite").save(fmt))
+    # shuffle="none" keeps the input layout: 3 input partitions over 2
+    # planned parts put one part in two tasks' files
+    split = os.path.join(work, "split")
+    encode(spark, df.repartitionByRange(3, "doc_id")
+           .sortWithinPartitions("doc_id"), split,
+           PipelineConfig(num_partitions=2, straggler_parts=0,
+                          max_chunk_values=5_000, shuffle="none"),
+           mode="overwrite")
+    assert max(len(glob.glob(os.path.join(d, "*.parquet"))) for d in
+               glob.glob(os.path.join(split, "data", "part_id=*"))) >= 2
+    return [(strag, tbl), (fmt, tbl), (split, tbl)]
+
+
+def _check_doc_id_pruning(spark, dst, tbl):
+    """For each doc_id case: select_chunks keeps exactly the chunks
+    PLCReader keeps, and decode returns exactly the source rows."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from plc.datasource import PLCReader, _load_plan
+    from plc.pipeline import decode, select_chunks
+    from pyspark.sql.datasource import (EqualTo, GreaterThanOrEqual, In,
+                                        LessThanOrEqual)
+    from pyspark.sql.types import StructType
+
+    ids = sorted(tbl.column("doc_id").to_pylist())
+    doc = tbl.column("doc_id")
+    present = ids[::83][:6]
+    absent = [k + "-absent" for k in present]  # inside chunk ranges
+    beyond = ["zz-" + k for k in present[:2]]  # above every chunk
+    ranges = [(ids[10], ids[60]), (ids[300], ids[330])]
+
+    def in_ranges(rs):
+        m = None
+        for lo, hi in rs:
+            r = pc.and_(pc.greater_equal(doc, lo), pc.less_equal(doc, hi))
+            m = r if m is None else pc.or_(m, r)
+        return m
+
+    cases = []  # (select_chunks/decode kwargs, pushed, option, row mask)
+    for k in (present[2], absent[2], beyond[0]):
+        cases.append(({"filters": {"doc_id": (k, k)}},
+                      [EqualTo(("doc_id",), k)], None,
+                      pc.equal(doc, k)))
+    for keys in (present, absent, beyond, present[:3] + absent[3:]):
+        cases.append(({"doc_ids": keys}, [In(("doc_id",), tuple(keys))],
+                      None, pc.is_in(doc, value_set=pa.array(keys))))
+    cases.append(({"filters": {"doc_id": ranges}}, [],
+                  {"doc_id": [list(r) for r in ranges]}, in_ranges(ranges)))
+    cases.append(({"doc_id_min": ids[100], "doc_id_max": ids[200]},
+                  [GreaterThanOrEqual(("doc_id",), ids[100]),
+                   LessThanOrEqual(("doc_id",), ids[200])], None,
+                  in_ranges([(ids[100], ids[200])])))
+    schema = StructType.fromJson(_load_plan(dst)["schema"])
+    cols = ["doc_id", "n_tok", "tokens"]
+    for kw, pushed, opt, mask in cases:
+        n_pipeline = select_chunks(spark, dst, **kw)[0].count()
+        r = PLCReader(dst, schema, opt)
+        list(r.pushFilters(pushed))
+        n_ds = sum(len(p.rows) for p in r.partitions())
+        assert n_ds == n_pipeline, (dst, kw, n_ds, n_pipeline)
+        got = decode(spark, dst, **kw).toArrow().select(cols) \
+            .sort_by("doc_id")
+        want = tbl.filter(mask).select(cols).sort_by("doc_id")
+        assert got.to_pylist() == want.to_pylist(), (dst, kw)
 
 
 def test_stream_root_batch_read_and_marker_gating(spark):
